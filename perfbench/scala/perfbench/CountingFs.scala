@@ -1,0 +1,31 @@
+package perfbench
+
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+
+/** The local filesystem with its calls counted. The local FS keeps byte
+  * counts in its Hadoop statistics but no operation counts, so the traced
+  * run installs this as `fs.file.impl` to count file operations from
+  * outside the engine: reads are opens, listings and status probes;
+  * writes are creates, renames, deletes and mkdirs. */
+class CountingLocalFileSystem extends LocalFileSystem {
+  import CountingLocalFileSystem._
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = { reads.incrementAndGet(); super.open(f, bufferSize) }
+  override def listStatus(f: Path): Array[FileStatus] = { reads.incrementAndGet(); super.listStatus(f) }
+  override def getFileStatus(f: Path): FileStatus = { reads.incrementAndGet(); super.getFileStatus(f) }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    writes.incrementAndGet()
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def rename(src: Path, dst: Path): Boolean = { writes.incrementAndGet(); super.rename(src, dst) }
+  override def delete(f: Path, recursive: Boolean): Boolean = { writes.incrementAndGet(); super.delete(f, recursive) }
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = { writes.incrementAndGet(); super.mkdirs(f, permission) }
+}
+
+object CountingLocalFileSystem {
+  val reads = new AtomicLong()
+  val writes = new AtomicLong()
+}
