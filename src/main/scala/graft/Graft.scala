@@ -70,11 +70,8 @@ object Graft {
       // unified sort shuffle writer — see Graft.session: the bypass-
       // merge writer's per-(map task × reduce partition) file churn
       // dominates small exchanges locally, and production partition
-      // counts never take that path anyway. Env-overridable for
-      // interleaved A/B measurement only (a core SparkConf setting —
-      // fixed at context creation, so a same-JVM toggle is impossible).
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS", "0"))
+      // counts never take that path anyway.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
       // AQE stays OFF here, deliberately diverging from the adoption
       // path (Graft.session, AQE+skew on — the 100 TB-correct setting):
       // measured at sf0.1/local[32], adaptive re-planning costs +28%

@@ -46,8 +46,7 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
   private def withScanFloor(spark: SparkSession, path: String,
                             df: DataFrame): DataFrame = {
-    if (!spark.conf.get("spark.graft.scanParallelismFloor",
-        sys.env.getOrElse("SPARK_GRAFT_SCAN_FLOOR", "true")).toBoolean)
+    if (!spark.conf.get("spark.graft.scanParallelismFloor", "true").toBoolean)
       return df
     val par = spark.sparkContext.defaultParallelism
     val under = floorMemo.computeIfAbsent(s"$path|$par", _ => {

@@ -112,14 +112,11 @@ object AnnIndex {
   def compact(spark: SparkSession, indexPath: String,
               numFiles: Int = 32): Unit = {
     readBits(spark, indexPath) // incomplete index: fail loudly, as search
-    val fs = fsFor(spark, indexPath)
-    val p = new Path(vecsPath(indexPath))
-    Layout.recoverSwap(fs, p)
-    val tmp = Layout.stagingPath(p, "compact_tmp")
-    fs.delete(tmp, true) // stale staging from a crashed run, never authoritative
-    Layout.writeRangeClustered(spark.read.parquet(p.toString),
-      tmp.toString, Seq("bucket"), numFiles)
-    Layout.swapInPlace(fs, tmp, p)
+    val p = vecsPath(indexPath)
+    Layout.replace(spark, p) { tmp =>
+      Layout.writeRangeClustered(spark.read.parquet(p), tmp, Seq("bucket"),
+        numFiles)
+    }
   }
 
   /** Multi-probe cosine top-k against the stored index. Identical

@@ -389,20 +389,16 @@ object CalibrationIndex {
     * discipline, same window caveat. */
   def compactBy(spark: SparkSession, indexPath: String,
                 group: String): Unit = {
-    val live = new Path(aggByPath(indexPath))
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Layout.recoverSwap(fs, live)
-    val folded = spark.read.parquet(live.toString)
-      .groupBy(col(group), col("thr"))
-      .agg(sum(col("n")).as("n"), sum(col("pos")).as("pos"))
-      .select(lit("folded").as("batch_tag"), col(group), col("thr"),
-        col("n"), col("pos"))
-      .localCheckpoint(true)
-    val tmp = Layout.stagingPath(live, "compact_tmp")
-    fs.delete(tmp, true) // stale staging from a crashed run
-    folded.repartition(1)
-      .write.partitionBy("batch_tag").parquet(tmp.toString)
-    Layout.swapInPlace(fs, tmp, live)
+    val live = aggByPath(indexPath)
+    Layout.replace(spark, live) { tmp =>
+      val folded = spark.read.parquet(live)
+        .groupBy(col(group), col("thr"))
+        .agg(sum(col("n")).as("n"), sum(col("pos")).as("pos"))
+        .select(lit("folded").as("batch_tag"), col(group), col("thr"),
+          col("n"), col("pos"))
+        .localCheckpoint(true)
+      folded.repartition(1).write.partitionBy("batch_tag").parquet(tmp)
+    }
   }
 
   /** Steady-state maintenance once every tag is behind the retry
@@ -410,19 +406,15 @@ object CalibrationIndex {
     * under a single `batch_tag=folded` partition, through the
     * stage-and-swap discipline. Every read answer is unchanged. */
   def compact(spark: SparkSession, indexPath: String): Unit = {
-    val live = new Path(aggPath(indexPath))
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Layout.recoverSwap(fs, live)
-    val folded = spark.read.parquet(live.toString)
-      .groupBy(col("thr"))
-      .agg(sum(col("n")).as("n"), sum(col("pos")).as("pos"))
-      .select(lit("folded").as("batch_tag"), col("thr"), col("n"),
-        col("pos"))
-      .localCheckpoint(true)
-    val tmp = Layout.stagingPath(live, "compact_tmp")
-    fs.delete(tmp, true) // stale staging from a crashed run
-    folded.repartition(1)
-      .write.partitionBy("batch_tag").parquet(tmp.toString)
-    Layout.swapInPlace(fs, tmp, live)
+    val live = aggPath(indexPath)
+    Layout.replace(spark, live) { tmp =>
+      val folded = spark.read.parquet(live)
+        .groupBy(col("thr"))
+        .agg(sum(col("n")).as("n"), sum(col("pos")).as("pos"))
+        .select(lit("folded").as("batch_tag"), col("thr"), col("n"),
+          col("pos"))
+        .localCheckpoint(true)
+      folded.repartition(1).write.partitionBy("batch_tag").parquet(tmp)
+    }
   }
 }

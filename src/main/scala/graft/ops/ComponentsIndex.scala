@@ -247,24 +247,18 @@ object ComponentsIndex {
     // localCheckpoint, not persist: the fold must be materialized
     // INDEPENDENT of the tables being swapped — a persisted partition
     // evicted under memory pressure would recompute from the live
-    // byid/ path mid-swap (absent between swapInPlace's two renames)
+    // byid/ path mid-swap (absent between the replace's two renames)
     // and fail the job or race the rewrite. The lineage cut severs
     // that dependency (the DigestIndex.compact discipline).
     val cur = currentLabels(spark, indexPath).localCheckpoint(true)
-    val fs = new Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     for ((path, keyCol, bCol) <- Seq(
         (byIdPath(indexPath), "id", "ib"),
-        (byCompPath(indexPath), "component", "cb"))) {
-      val live = new Path(path)
-      Layout.recoverSwap(fs, live)
-      val tmp = Layout.stagingPath(live, "compact_tmp")
-      fs.delete(tmp, true) // stale staging, never authoritative
-      cur.select(bucketOf(col(keyCol)).as(bCol),
-          lit("folded").as("batch_tag"), col("id"), col("component"))
-        .repartition(numFiles, col(bCol))
-        .write.partitionBy(bCol, "batch_tag").parquet(tmp.toString)
-      Layout.swapInPlace(fs, tmp, live)
-    }
+        (byCompPath(indexPath), "component", "cb")))
+      Layout.replace(spark, path) { tmp =>
+        cur.select(bucketOf(col(keyCol)).as(bCol),
+            lit("folded").as("batch_tag"), col("id"), col("component"))
+          .repartition(numFiles, col(bCol))
+          .write.partitionBy(bCol, "batch_tag").parquet(tmp)
+      }
   }
 }

@@ -142,19 +142,16 @@ object DigestIndex {
 
   def compact(spark: SparkSession, indexPath: String,
               numFiles: Int = NB): Unit = {
-    val live = new Path(digestsPath(indexPath))
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Layout.recoverSwap(fs, live)
-    val folded = spark.read.parquet(live.toString)
-      .groupBy("digest")
-      .agg(min(col("id")).as("id"), sum(col("n")).cast("long").as("n"))
-      .select(bucketOf(col("digest")).as("db"),
-        lit("folded").as("batch_tag"), col("digest"), col("id"), col("n"))
-      .localCheckpoint(true)
-    val tmp = Layout.stagingPath(live, "compact_tmp")
-    fs.delete(tmp, true) // stale staging from a crashed run
-    folded.repartition(numFiles, col("db"))
-      .write.partitionBy("db", "batch_tag").parquet(tmp.toString)
-    Layout.swapInPlace(fs, tmp, live)
+    val live = digestsPath(indexPath)
+    Layout.replace(spark, live) { tmp =>
+      val folded = spark.read.parquet(live)
+        .groupBy("digest")
+        .agg(min(col("id")).as("id"), sum(col("n")).cast("long").as("n"))
+        .select(bucketOf(col("digest")).as("db"),
+          lit("folded").as("batch_tag"), col("digest"), col("id"), col("n"))
+        .localCheckpoint(true)
+      folded.repartition(numFiles, col("db"))
+        .write.partitionBy("db", "batch_tag").parquet(tmp)
+    }
   }
 }

@@ -28,7 +28,7 @@ import org.apache.spark.sql.SparkSession
   *    to its current summary — the strongest shape; the others fold
   *    tags and re-cluster files.
   *  - Every rewrite lands through the stage-and-swap discipline
-  *    ([[Layout.swapInPlace]]): a crash leaves the old or the new
+  *    ([[Layout.replace]]): a crash leaves the old or the new
   *    layout, never half, and the owning writer self-heals on its next
   *    entry. Probe/search answers are pinned unchanged across
   *    maintenance by each index's spec and by IndexesSpec end-to-end.

@@ -78,14 +78,6 @@ object Layout {
   private def commitMarker(p: Path) = hiddenSibling(p, "swap_commit")
   private def compactTmpPath(p: Path) = hiddenSibling(p, "compact_tmp")
 
-  /** Staging-path helper for every writer that stages before a swap or
-    * a dynamic overwrite: the hidden-sibling rule above, shared so no
-    * caller invents a VISIBLE sibling (e.g. `table_name=t.stage` inside
-    * a checkpoint root) that a wholesale read would partition-discover
-    * as a bogus partition. */
-  private[graft] def stagingPath(p: Path, suffix: String): Path =
-    hiddenSibling(p, suffix)
-
   /** True when `p` holds at least one COMMITTED data file. A bare
     * `fs.exists(dir)` probe is the wrong "does this table exist" test
     * for any writer that may have crashed mid-job: the parquet
@@ -167,7 +159,7 @@ object Layout {
       merged: DataFrame, path: String, partCol: String,
       stageSuffix: String): Long = {
     val p = new Path(path)
-    val stage = stagingPath(p, stageSuffix)
+    val stage = hiddenSibling(p, stageSuffix)
     merged.write.mode(SaveMode.Overwrite).parquet(stage.toString)
     val staged = spark.read.parquet(stage.toString)
     val n = staged.count()
@@ -248,20 +240,39 @@ object Layout {
     if (fs.exists(old) && !fs.exists(commitMarker(p))) old else p
   }
 
-  /** Replace the table at `p` with the complete table staged at `tmp`:
-    * old aside → new in → write commit marker → drop old, after first
-    * running [[recoverSwap]]. Not atomic — between the renames `p` is
-    * absent (readers fail loudly rather than merging a partial table) —
-    * but crash-consistent at every step: until the marker exists the
-    * old table is restorable, and once it exists the new table is known
-    * complete. A crash can lose at most the in-flight replacement,
-    * never the previously committed table. Hadoop `FileSystem`
-    * throughout; correct on HDFS/local and on copy-based renames (S3A),
-    * though a real table format is the better tool where rename cost
-    * matters. */
-  def swapInPlace(fs: org.apache.hadoop.fs.FileSystem, tmp: Path,
-                  p: Path): Unit = {
+  /** Replace the directory at `path` wholesale with what `write`
+    * produces — the ONE crash-safe replace every rewrite-the-whole-dir
+    * writer goes through (compactions, folds, the streaming sink, the
+    * Runner's extract landing and full load). In order: heal a crashed
+    * swap ([[recoverSwap]]), so `write` may read the live copy; clear
+    * the hidden staging sibling (`.<name>.compact_tmp`, crash residue
+    * that is never authoritative); run `write` with that staging path;
+    * swap the staged copy in. A `write` that throws leaves the live
+    * copy untouched and the residue for the next replace to clear.
+    * Returns what `write` returns. */
+  def replace[T](spark: SparkSession, path: String)(write: String => T): T = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverSwap(fs, p)
+    val tmp = compactTmpPath(p)
+    fs.delete(tmp, true)
+    val out = write(tmp.toString)
+    swapInPlace(fs, tmp, p)
+    out
+  }
+
+  /** Move the complete table staged at `tmp` into `p` (healed by the
+    * caller): old aside → new in → write commit marker → drop old. Not
+    * atomic — between the renames `p` is absent (readers fail loudly
+    * rather than merging a partial table) — but crash-consistent at
+    * every step: until the marker exists the old table is restorable,
+    * and once it exists the new table is known complete. A crash can
+    * lose at most the in-flight replacement, never the previously
+    * committed table. Hadoop `FileSystem` throughout; correct on
+    * HDFS/local and on copy-based renames (S3A), though a real table
+    * format is the better tool where rename cost matters. */
+  private def swapInPlace(fs: org.apache.hadoop.fs.FileSystem, tmp: Path,
+                          p: Path): Unit = {
     val old = swapOldPath(p)
     if (fs.exists(p)) {
       require(fs.rename(p, old), s"swap: could not move $p aside")
@@ -281,25 +292,22 @@ object Layout {
   /** Small-file compaction. Incremental/streaming writers accrete
     * files; at 100 TB a table of 4 KB files dies on driver file-listing
     * and per-file open cost long before any byte is scanned. Rewrites
-    * the table into `ceil(bytes / targetFileBytes)` files and swaps it
-    * in via [[swapInPlace]] — self-healing on entry ([[recoverSwap]]),
-    * a complete copy of the table always on disk. For a dt-partitioned
-    * table, compact per partition directory.
-    * Returns the file count written. */
+    * the table into `ceil(bytes / targetFileBytes)` files through
+    * [[replace]] — self-healing on entry, a complete copy of the table
+    * always on disk. For a dt-partitioned table, compact per partition
+    * directory. Returns the file count written. */
   def compact(spark: SparkSession, path: String,
               targetFileBytes: Long = 512L << 20): Int = {
     require(targetFileBytes > 0)
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, p)
-    val bytes = fs.getContentSummary(p).getLength
-    val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val tmp = compactTmpPath(p)
-    fs.delete(tmp, true) // stale staging from a crashed run, never authoritative
-    spark.read.parquet(path).repartition(nFiles)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    swapInPlace(fs, tmp, p)
-    nFiles
+    replace(spark, path) { tmp =>
+      val p = new Path(path)
+      val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getContentSummary(p).getLength
+      val nFiles =
+        math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+      spark.read.parquet(path).repartition(nFiles).write.parquet(tmp)
+      nFiles
+    }
   }
 
   /** Partition-scoped compaction for a hive-partitioned table (the
@@ -382,7 +390,7 @@ object Layout {
     * `band=`/`hb=` dir for two-level layouts) so that all tags NOT in
     * `keepTags` merge into `batch_tag=<foldedTag>`, kept tags are
     * copied through, and the whole outer dir lands via
-    * [[swapInPlace]] — a crash leaves the old or the new layout, never
+    * [[replace]] — a crash leaves the old or the new layout, never
     * half.
     *
     * Contract: folding a batch FORFEITS its replay idempotency (its
@@ -414,19 +422,17 @@ object Layout {
       // work only when something would actually merge: a stale set
       // that is empty, or already just the folded partition, is final
       if (stale.exists(d => tagOf(d.getName) != foldedTag)) {
-        val tmp = compactTmpPath(outer)
-        fs.delete(tmp, true)
-        def rewrite(srcs: Seq[Path], destTag: String): Unit = {
-          val bytes = srcs.map(s => fs.getContentSummary(s).getLength).sum
-          val n = math.max(1L,
-            (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-          spark.read.parquet(srcs.map(_.toString): _*).repartition(n)
-            .write.mode(SaveMode.Overwrite)
-            .parquet(new Path(tmp, s"batch_tag=$destTag").toString)
+        replace(spark, outer.toString) { tmp =>
+          def rewrite(srcs: Seq[Path], destTag: String): Unit = {
+            val bytes = srcs.map(s => fs.getContentSummary(s).getLength).sum
+            val n = math.max(1L,
+              (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+            spark.read.parquet(srcs.map(_.toString): _*).repartition(n)
+              .write.parquet(s"$tmp/batch_tag=$destTag")
+          }
+          rewrite(stale, foldedTag)
+          kept.foreach(k => rewrite(Seq(k), tagOf(k.getName)))
         }
-        rewrite(stale, foldedTag)
-        kept.foreach(k => rewrite(Seq(k), tagOf(k.getName)))
-        swapInPlace(fs, tmp, outer)
         done += 1
       }
     }

@@ -190,19 +190,16 @@ object NoveltyIndex {
     * through the stage-and-swap discipline. */
   def compact(spark: SparkSession, indexPath: String,
               numFiles: Int = NB): Unit = {
-    val live = new Path(gramsPath(indexPath))
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Layout.recoverSwap(fs, live)
-    val folded = spark.read.parquet(live.toString)
-      .groupBy("gh")
-      .agg(min(col("first")).as("first"))
-      .select(bucketOf(col("gh")).as("gb"),
-        lit("folded").as("batch_tag"), col("gh"), col("first"))
-      .localCheckpoint(true)
-    val tmp = Layout.stagingPath(live, "compact_tmp")
-    fs.delete(tmp, true) // stale staging from a crashed run
-    folded.repartition(numFiles, col("gb"))
-      .write.partitionBy("gb", "batch_tag").parquet(tmp.toString)
-    Layout.swapInPlace(fs, tmp, live)
+    val live = gramsPath(indexPath)
+    Layout.replace(spark, live) { tmp =>
+      val folded = spark.read.parquet(live)
+        .groupBy("gh")
+        .agg(min(col("first")).as("first"))
+        .select(bucketOf(col("gh")).as("gb"),
+          lit("folded").as("batch_tag"), col("gh"), col("first"))
+        .localCheckpoint(true)
+      folded.repartition(numFiles, col("gb"))
+        .write.partitionBy("gb", "batch_tag").parquet(tmp)
+    }
   }
 }

@@ -198,7 +198,7 @@ object PqDiskIndex {
     * open) becomes the cost before any byte is scanned. Compaction
     * rewrites `encoded/` as ONE range-clustered file set — the
     * fresh-build shape — through the stage-and-swap discipline
-    * ([[Layout.swapInPlace]], self-healing on entry), so a crash
+    * ([[Layout.replace]], self-healing on entry), so a crash
     * leaves the old or the new table, never half. Books, coarse, and
     * the meta marker are untouched: compaction moves bytes, it never
     * re-quantizes — codes stay bit-identical, so search results are
@@ -207,34 +207,30 @@ object PqDiskIndex {
               numFiles: Int = 32,
               keepTags: Set[String] = Set.empty): Unit = {
     readMeta(spark, indexPath) // incomplete index: fail loudly, as search
-    val fs = fsFor(spark, indexPath)
-    val p = new Path(encPath(indexPath))
-    Layout.recoverSwap(fs, p)
-    val tmp = Layout.stagingPath(p, "compact_tmp")
-    fs.delete(tmp, true) // stale staging from a crashed run, never authoritative
-    val cur = spark.read.parquet(p.toString)
-    if (cur.columns.contains("batch_tag")) {
-      // fold tags outside the retry horizon into one generation
-      // (folding forfeits the folded batches' replay idempotency — keep
-      // every tag still inside the caller's retry horizon in
-      // `keepTags`); kept tags are rewritten through, re-range-
-      // clustered within their own partition, so their replay contract
-      // AND the probe's per-file pruning both survive the compaction
-      require(!keepTags.contains("folded"),
-        "'folded' cannot also be a kept tag")
-      val tags = cur.select("batch_tag").distinct()
-        .collect().map(_.getString(0)).toSeq
-      val kept = tags.filter(keepTags.contains)
-      writeTagged(
-        cur.filter(!col("batch_tag").isInCollection(keepTags.toSeq :+ ""))
-          .drop("batch_tag"),
-        tmp.toString, "folded", numFiles, SaveMode.Overwrite)
-      kept.foreach(t => writeTagged(
-        cur.filter(col("batch_tag") === t).drop("batch_tag"),
-        tmp.toString, t, math.max(1, numFiles / 8), SaveMode.Overwrite))
-    } else
-      Layout.writeRangeClustered(cur, tmp.toString, Seq("cluster"), numFiles)
-    Layout.swapInPlace(fs, tmp, p)
+    Layout.replace(spark, encPath(indexPath)) { tmp =>
+      val cur = spark.read.parquet(encPath(indexPath))
+      if (cur.columns.contains("batch_tag")) {
+        // fold tags outside the retry horizon into one generation
+        // (folding forfeits the folded batches' replay idempotency — keep
+        // every tag still inside the caller's retry horizon in
+        // `keepTags`); kept tags are rewritten through, re-range-
+        // clustered within their own partition, so their replay contract
+        // AND the probe's per-file pruning both survive the compaction
+        require(!keepTags.contains("folded"),
+          "'folded' cannot also be a kept tag")
+        val tags = cur.select("batch_tag").distinct()
+          .collect().map(_.getString(0)).toSeq
+        val kept = tags.filter(keepTags.contains)
+        writeTagged(
+          cur.filter(!col("batch_tag").isInCollection(keepTags.toSeq :+ ""))
+            .drop("batch_tag"),
+          tmp, "folded", numFiles, SaveMode.Overwrite)
+        kept.foreach(t => writeTagged(
+          cur.filter(col("batch_tag") === t).drop("batch_tag"),
+          tmp, t, math.max(1, numFiles / 8), SaveMode.Overwrite))
+      } else
+        Layout.writeRangeClustered(cur, tmp, Seq("cluster"), numFiles)
+    }
   }
 
   /** IVFADC search against the stored index — identical output to

@@ -52,11 +52,6 @@ import graft.state.Checkpoint
   */
 class Runner(spark: SparkSession, checkpoint: Checkpoint, audit: AuditLog) {
 
-  private def fs(path: String): (org.apache.hadoop.fs.FileSystem, Path) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
   /** Derived date partition column: first 10 chars of the ISO order
     * column (string or timestamp), as a DATE so it round-trips through
     * partition-directory type inference unchanged. */
@@ -81,16 +76,12 @@ class Runner(spark: SparkSession, checkpoint: Checkpoint, audit: AuditLog) {
     // fresh rows. But the PREVIOUS landing is also the raw-zone
     // archive, and a failed fetch must not destroy it — so the fetch
     // lands in a hidden staging sibling and only a SUCCESSFUL fetch
-    // swaps it in (same recover/stage/swap cycle as the streaming
-    // sink). The accumulating-directory shape belongs to the streaming
-    // ingest (BarsStream), which tracks files by name.
-    val (hfs, lpath) = fs(landDir)
-    graft.ops.Layout.recoverSwap(hfs, lpath)
-    val stage = graft.ops.Layout.stagingPath(lpath, "extract")
-    if (hfs.exists(stage)) hfs.delete(stage, true)
-    val pages = client.fetchAndLand(spark, stage.toString, symbols,
-      timeframe, start, end)
-    graft.ops.Layout.swapInPlace(hfs, stage, lpath)
+    // swaps it in (the same Layout.replace as the streaming sink). The
+    // accumulating-directory shape belongs to the streaming ingest
+    // (BarsStream), which tracks files by name.
+    val pages = graft.ops.Layout.replace(spark, landDir) { stage =>
+      client.fetchAndLand(spark, stage, symbols, timeframe, start, end)
+    }
     audit.log(s"extract: $pages page(s) landed at $landDir")
     graft.io.JsonSource.readBars(spark, landDir)
   }
@@ -103,28 +94,42 @@ class Runner(spark: SparkSession, checkpoint: Checkpoint, audit: AuditLog) {
     * line. An empty batch writes nothing and leaves the watermark and
     * target untouched.
     *
-    * The order column must be NON-NULL and date-parseable: full loads
-    * enforce it loudly, because the incremental watermark filter could
+    * The order column must be NON-NULL and date-parseable: every load
+    * enforces it loudly, because the incremental watermark filter could
     * only drop such rows silently (null >= watermark is null). */
   def loadIncremental(source: DataFrame, targetPath: String, table: String,
                       keys: Seq[String], orderCol: String): Long = {
     try {
       audit.log(s"$table: load starting")
-      val (hfs, tpath) = fs(targetPath)
+      val tpath = new Path(targetPath)
       // committed-data probe, not bare exists(): a directory holding
       // only crash residue must route to the self-healing full load,
       // not into spark.read.parquet on a schema-less path
-      val exists = graft.ops.Layout.hasCommittedFiles(hfs, tpath)
-      // the batch is consumed several times (emptiness probe, target
-      // write, watermark max); cache it so an expensive source extract
-      // runs ONCE per load and the watermark can't diverge from what
-      // was written
-      def withCachedBatch(batch: DataFrame)(body: DataFrame => Long): (Long, String) = {
+      val exists = graft.ops.Layout.hasCommittedFiles(
+        tpath.getFileSystem(spark.sparkContext.hadoopConfiguration), tpath)
+      // the batch is consumed twice (probe, target write); cache it so
+      // an expensive source extract runs ONCE per load and the
+      // watermark can't diverge from what was written. ONE aggregate
+      // probes it: row count, the non-null/parseable-date contract, and
+      // the watermark. An empty batch writes nothing. The date contract
+      // holds on both branches: the incremental `>= watermark` filter
+      // would silently DROP null-ordered rows (null >= x is null), and
+      // one garbage order value (a non-ISO string sorting above the
+      // watermark) would land in the null partition AND poison the
+      // saved watermark, stalling every later run.
+      def probed(batch: DataFrame)(write: (DataFrame, Long) => Long): (Long, String) = {
         batch.persist()
         try {
-          val written = body(batch)
-          (written,
-            batch.agg(max(col(orderCol).cast("string"))).collect()(0).getString(0))
+          val r = batch.agg(count(lit(1)), count(when(col("dt").isNull, 1)),
+            max(col(orderCol).cast("string"))).head()
+          if (r.getLong(0) == 0) (0L, null)
+          else {
+            require(r.getLong(1) == 0,
+              s"$table: order column '$orderCol' has rows with NULL or " +
+                "unparseable dates; a watermark pipeline cannot window " +
+                "them — clean or default them upstream")
+            (write(batch, r.getLong(0)), r.getString(2))
+          }
         } finally { batch.unpersist(); () }
       }
       val checkpointBefore = checkpoint.get(table)
@@ -133,70 +138,41 @@ class Runner(spark: SparkSession, checkpoint: Checkpoint, audit: AuditLog) {
           // inclusive re-extraction from the watermark's date, like the
           // reference's start=checkpoint_date[:10] slice
           val fromDate = wm.substring(0, 10)
-          withCachedBatch(
-            withDt(source.filter(col(orderCol) >= lit(fromDate)), orderCol)) { batch =>
-            if (batch.isEmpty) 0L
-            else {
-              // the SAME non-null/parseable-date contract the full load
-              // enforces — without it here, one garbage order value
-              // (e.g. a non-ISO string that sorts above the watermark)
-              // would land in the null partition AND poison the saved
-              // watermark, permanently stalling every later run on a
-              // lexicographic filter no real timestamp passes
-              require(batch.filter(col("dt").isNull).isEmpty,
-                s"$table: order column '$orderCol' has rows with NULL or " +
-                  "unparseable dates in the incremental batch; clean or " +
-                  "default them upstream")
-              // only the overlap partitions of the target are read (pruned
-              // on the dt partition column) and only they are rewritten —
-              // via the shared staged dynamic-overwrite cycle
-              val overlap = spark.read.parquet(targetPath)
-                .filter(col("dt") >= to_date(lit(fromDate)))
-              val merged = Upsert.upsert(overlap, batch, keys)
-              graft.ops.Layout.stagedDynamicOverwrite(
-                spark, merged, targetPath, "dt", "stage")
-            }
+          probed(withDt(source.filter(col(orderCol) >= lit(fromDate)),
+              orderCol)) { (batch, _) =>
+            // only the overlap partitions of the target are read (pruned
+            // on the dt partition column) and only they are rewritten —
+            // via the shared staged dynamic-overwrite cycle
+            val overlap = spark.read.parquet(targetPath)
+              .filter(col("dt") >= to_date(lit(fromDate)))
+            val merged = Upsert.upsert(overlap, batch, keys)
+            graft.ops.Layout.stagedDynamicOverwrite(
+              spark, merged, targetPath, "dt", "stage")
           }
         case _ =>
           // full load: the target (if any) is REPLACED wholesale, making
           // "full extract -> create + insert" literally true. A lost
           // checkpoint over an existing target must not dynamic-overwrite
           // — that would replace only the batch's partitions and leave a
-          // silent mix of old and new data. Stage-and-swap keeps the old
+          // silent mix of old and new data. Layout.replace keeps the old
           // table recoverable until the new one is fully in place.
           // An EMPTY batch never replaces anything: with a lost checkpoint
           // over an existing target (e.g. a source outage on the same run
           // that lost the state store), swapping in an empty extract would
-          // wipe the table and leave a schema-less path behind. Honour the
-          // contract above — empty batch writes nothing — unconditionally.
-          withCachedBatch(withDt(source, orderCol)) { batch =>
-            if (batch.isEmpty) 0L
-            else {
-              // Contract: the order column must be non-null and
-              // date-parseable. The incremental branch's `>= watermark`
-              // filter silently DROPS null-ordered rows (null >= x is
-              // null) — so they must never enter the table in the first
-              // place; fail loudly here, where the batch is scanned
-              // wholesale anyway, instead of diverging later.
-              require(batch.filter(col("dt").isNull).isEmpty,
-                s"$table: order column '$orderCol' has rows with NULL or " +
-                  "unparseable dates; a watermark pipeline cannot window " +
-                  "them — clean or default them upstream")
-              val stage = graft.ops.Layout.stagingPath(tpath, "stage_full")
-              batch.write.mode(SaveMode.Overwrite).partitionBy("dt")
-                .parquet(stage.toString)
-              graft.ops.Layout.swapInPlace(hfs, stage, tpath)
-              batch.count()
+          // wipe the table and leave a schema-less path behind.
+          probed(withDt(source, orderCol)) { (batch, n) =>
+            graft.ops.Layout.replace(spark, targetPath) { stage =>
+              batch.write.partitionBy("dt").parquet(stage)
             }
+            n
           }
       }
       // watermark advances monotonically; an empty batch leaves it
       // alone. Reuses the run-entry read — this Runner is the table's
-      // sole checkpoint owner, so a second FS probe + parquet read
-      // could never observe a different value. An UNCHANGED watermark
-      // is not re-saved: the save is a stage+swap with a transient
-      // no-live-path window, and an idle run (weekend, source outage)
-      // must not pay that risk for zero state change.
+      // sole checkpoint owner, so a second read could never observe a
+      // different value. An UNCHANGED watermark is not re-saved: an
+      // idle run (weekend, source outage) writes no new version for
+      // zero state change.
       val wm = (checkpointBefore.toSeq ++ Option(batchWm).toSeq)
         .sorted.lastOption.orNull
       if (wm != null && !checkpointBefore.contains(wm))

@@ -1,112 +1,77 @@
 package graft.state
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 
 /** Incremental-load watermark state, mirroring the reference's
   * `check_points(table_name PK, latest_timestamp)` table and its
   * get/save semantics (reference: etl_project/utilities/utilities.py:8-49).
   *
-  * State is a tiny keyed parquet directory, partitioned by table name so
-  * a save for one table never rewrites another's row — the same
-  * upsert-on-PK contract the reference got from ON CONFLICT. Watermarks
-  * are ISO-8601 *strings* compared lexicographically, exactly like the
-  * reference's string max (SURVEY §7.4 string-timestamp caveat).
+  * On disk each table owns one directory, `<dir>/table_name=<table>/`,
+  * so a save for one table never touches another's — the same
+  * upsert-on-PK contract the reference got from ON CONFLICT. It holds
+  * the watermark as UTF-8 text in version files `v<n>`; the newest `n`
+  * is the committed value. Watermarks are ISO-8601 *strings* compared
+  * lexicographically, exactly like the reference's string max
+  * (SURVEY §7.4 string-timestamp caveat).
   *
-  * Concurrency contract: ONE pipeline owns a table's checkpoint (the
-  * reference's model), but reads are safe from anywhere: `get` is
-  * strictly read-only — it reads the last-committed copy
-  * ([[graft.ops.Layout.committedReadPath]]) instead of running swap
-  * repair, so a reader racing the owner's save can never delete or
-  * restore directories under the in-flight swap. Repair happens on the
-  * owner's next [[save]].
+  * A watermark is one string, so this is plain Hadoop `FileSystem` I/O
+  * (local, HDFS, S3A) and never a Spark job. A save writes the hidden
+  * temp file `.v.tmp`, then renames it to the never-used name
+  * `v<newest+1>`. That rename is atomic on local FS and HDFS: a version
+  * file is complete or absent, and a crashed save leaves only the temp
+  * file, which `get` ignores and the next save overwrites. (On stores
+  * whose rename is a copy, such as S3A, it is not atomic.) The newest
+  * two versions are kept, so a reader racing one concurrent save still
+  * finds the version it listed. ONE pipeline owns a table's checkpoint
+  * (the reference's model); reads are safe from anywhere.
   */
 class Checkpoint(spark: SparkSession, dir: String) {
 
-  private def path(table: String) = s"$dir/table_name=$table"
+  private val Version = """v(\d+)""".r
 
-  /** Latest watermark for `table`, if any
-    * (reference: utilities/utilities.py:8-22). Existence is probed via
-    * the Hadoop FileSystem API so the state store works on any
-    * supported storage (local, HDFS, S3A), not just the local FS.
-    * Strictly read-only: after a crash mid-[[save]] it reads the
-    * last-COMMITTED copy (the pending swap's old directory) rather
-    * than repairing — repair is write-shaped and belongs to the owner,
-    * whose next save runs it. */
-  def get(table: String): Option[String] = {
-    val live = new org.apache.hadoop.fs.Path(path(table))
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readAt(p: org.apache.hadoop.fs.Path): Option[String] =
-      spark.read.parquet(p.toString)
-        .agg(max(col("latest_timestamp"))).collect()(0).getString(0) match {
-        case null => None
-        case s => Some(s)
-      }
-    val p = graft.ops.Layout.committedReadPath(fs, live)
-    // Race with the owner's swap: committedReadPath can return the
-    // pending .swap_old, and the owner may complete (drop the old copy)
-    // between that probe and our read. A vanished/unreadable OLD path
-    // means the swap committed — re-probe the LIVE path once and read
-    // that. Only a genuinely absent live path means "no checkpoint";
-    // anything else fails loudly rather than silently restarting the
-    // pipeline from scratch (a None here sends Runner down the
-    // wholesale-replace full-load branch).
-    if (p != live) {
-      if (fs.exists(p))
-        try readAt(p)
-        catch {
-          // fall to live ONLY when the swap has COMMITTED since the
-          // probe (old gone, or the commit marker appeared — the owner
-          // deletes the old copy file-by-file on some stores, so an
-          // empty-looking old dir with the marker is the normal
-          // post-commit transient). An old copy that is present and
-          // unmarked may mean a partially copied, UNCOMMITTED live
-          // path: propagate rather than read it.
-          case e: Exception =>
-            if (graft.ops.Layout.committedReadPath(fs, live) == live &&
-                fs.exists(live)) readAt(live)
-            else throw e
-        }
-      else if (fs.exists(live)) readAt(live)
-      else None
-    } else if (fs.exists(live)) {
-      // Symmetric race with the swap START: the owner may rename live
-      // away (-> .swap_old) between our exists probe and the read. One
-      // re-probe finds either the pending old copy or the new live;
-      // a second failure is a real error and propagates.
-      try readAt(live)
-      catch {
-        case _: Exception =>
-          val p2 = graft.ops.Layout.committedReadPath(fs, live)
-          if (fs.exists(p2))
-            // the owner can also COMPLETE the swap between this probe
-            // and the read — same committed-only fallback as above
-            try readAt(p2)
-            catch {
-              case e2: Exception =>
-                if (graft.ops.Layout.committedReadPath(fs, live) == live &&
-                    fs.exists(live)) readAt(live)
-                else throw e2
-            }
-          else if (fs.exists(live)) readAt(live)
-          else None
-      }
-    } else None
+  private def tableDir(table: String) = new Path(s"$dir/table_name=$table")
+
+  private def fsOf(p: Path) =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Committed version numbers under `d`, oldest first. Anything else in
+    * the directory — the temp file, checksum files, a pre-versioning
+    * parquet checkpoint — is not a version. */
+  private def versions(d: Path): Seq[Long] = {
+    val fs = fsOf(d)
+    if (!fs.exists(d)) Nil
+    else fs.listStatus(d).toSeq.map(_.getPath.getName)
+      .collect { case Version(n) => n.toLong }.sorted
   }
 
-  /** Upsert the watermark row for `table`
-    * (reference: utilities/utilities.py:24-49). A direct
-    * `SaveMode.Overwrite` is delete-then-write — a crash mid-save would
-    * leave an existing-but-unreadable directory that wedges every
-    * subsequent read. Stage-and-swap instead: the previous watermark
-    * survives any crash, at worst the save is retried. */
+  /** Latest watermark for `table`, if any
+    * (reference: utilities/utilities.py:8-22). Strictly read-only. */
+  def get(table: String): Option[String] = {
+    val d = tableDir(table)
+    versions(d).lastOption.map { v =>
+      val in = fsOf(d).open(new Path(d, s"v$v"))
+      try new String(in.readAllBytes(), UTF_8) finally in.close()
+    }
+  }
+
+  /** Upsert the watermark for `table`
+    * (reference: utilities/utilities.py:24-49): commit it as the next
+    * version, then drop all but the newest two. */
   def save(table: String, latest: String): Unit = {
-    import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(path(table))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = graft.ops.Layout.stagingPath(p, "stage")
-    Seq(latest).toDF("latest_timestamp")
-      .write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    graft.ops.Layout.swapInPlace(fs, stage, p)
+    val d = tableDir(table)
+    val fs = fsOf(d)
+    val vs = versions(d)
+    val tmp = new Path(d, ".v.tmp")
+    val out = fs.create(tmp, true)
+    try {
+      new java.io.OutputStreamWriter(out, UTF_8).append(latest).flush()
+      out.hsync() // durable before the rename publishes it
+    } finally out.close()
+    val next = vs.lastOption.getOrElse(0L) + 1
+    require(fs.rename(tmp, new Path(d, s"v$next")),
+      s"checkpoint: could not commit version $next of $table")
+    vs.dropRight(1).foreach(v => fs.delete(new Path(d, s"v$v"), false))
   }
 }

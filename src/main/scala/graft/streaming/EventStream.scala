@@ -40,7 +40,7 @@ object EventStream {
     * streaming analogue of the watermark re-extract), deduped against
     * the target per micro-batch with the SAME [[graft.ops.Upsert]]
     * operator, and swapped in with checked renames
-    * ([[graft.ops.Layout.swapInPlace]]): the merge is staged beside the
+    * ([[graft.ops.Layout.replace]]): the merge is staged beside the
     * target and never overwrites it in place, so no batch ever reads a
     * half-written table. A crash between the swap's renames leaves the
     * previous table at `<target>.swap_old`; the next batch's entry
@@ -70,7 +70,8 @@ object EventStream {
 
   /** The micro-batch upsert body shared by every streaming ingest
     * ([[fileIngest]], [[BarsStream.ingest]]): dedup against the target
-    * with the batch [[graft.ops.Upsert]] operator, stage, swap. */
+    * with the batch [[graft.ops.Upsert]] operator, then
+    * [[graft.ops.Layout.replace]] the target. */
   private[streaming] def upsertSink(targetPath: String, keys: Seq[String])
       : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
     (batch, _) => {
@@ -85,17 +86,16 @@ object EventStream {
         val target = new org.apache.hadoop.fs.Path(targetPath)
         val fs = target
           .getFileSystem(spark2.sparkContext.hadoopConfiguration)
-        graft.ops.Layout.recoverSwap(fs, target)
-        val merged =
-          if (fs.exists(target))
-            graft.ops.Upsert.upsert(
-              spark2.read.parquet(targetPath), batch.toDF(), keys)
-          else batch.toDF()
-        // the merge lazily READS the live target, so it must land in a
-        // stage dir first; the swap then replaces the target whole
-        val stage = graft.ops.Layout.stagingPath(target, "stage")
-        merged.write.mode("overwrite").parquet(stage.toString)
-        graft.ops.Layout.swapInPlace(fs, stage, target)
+        // the merge lazily READS the live target, so it lands in the
+        // replace's staging dir first, then replaces the target whole
+        graft.ops.Layout.replace(spark2, targetPath) { stage =>
+          val merged =
+            if (fs.exists(target))
+              graft.ops.Upsert.upsert(
+                spark2.read.parquet(targetPath), batch.toDF(), keys)
+            else batch.toDF()
+          merged.write.parquet(stage)
+        }
       }
       ()
     }

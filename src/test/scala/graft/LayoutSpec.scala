@@ -220,6 +220,35 @@ class LayoutSpec extends SparkSpec {
     assert(!fs.exists(oldPath))
   }
 
+  test("replace: a failed write leaves the live table, the next replace commits") {
+    import org.apache.hadoop.fs.Path
+    val dir = Files.createTempDirectory("replace").toString + "/t"
+    spark.range(100).toDF("id").write.parquet(dir)
+    var staged = ""
+    intercept[IllegalStateException] {
+      Layout.replace(spark, dir) { tmp =>
+        staged = tmp
+        spark.range(7).toDF("id").write.parquet(tmp) // partial rewrite...
+        throw new IllegalStateException("writer died") // ...then a crash
+      }
+    }
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the live table is readable and unchanged; the residue is hidden
+    assert(spark.read.parquet(dir).count() == 100)
+    assert(new Path(staged).getName.startsWith("."))
+    assert(fs.exists(new Path(staged)), "crash residue expected")
+    // the next replace clears the stale staging (a plain write into it
+    // would fail on an existing path) and commits
+    val n = Layout.replace(spark, dir) { tmp =>
+      assert(tmp == staged && !fs.exists(new Path(tmp)))
+      spark.range(40).toDF("id").write.parquet(tmp)
+      40
+    }
+    assert(n == 40)
+    assert(spark.read.parquet(dir).count() == 40)
+    assert(!fs.exists(new Path(staged)))
+  }
+
   test("writeZOrdered: preserves rows across the requested file count") {
     val dir = Files.createTempDirectory("zlayout").toString + "/t"
     val grid = spark.range(64).select(col("id").as("a"))

@@ -239,22 +239,59 @@ class RunnerSpec extends SparkSpec {
     val dir = tmpDir() + "/cp"
     val cp = new Checkpoint(spark, dir)
     cp.save("t", "2025-01-01T00:00:00Z")
-    // simulate the owner crashing mid-save: committed copy moved aside,
-    // a PARTIAL (here: empty-schema-breaking) replacement at the live path
-    val live = new Path(s"$dir/table_name=t")
-    val old = new Path(s"$dir/.table_name=t.swap_old")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(live, old))
-    fs.mkdirs(live) // partial rename-in: directory exists, no data
-    // a racing reader must see the COMMITTED watermark...
+    val tdir = new Path(s"$dir/table_name=t")
+    val fs = tdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(tdir, ".v.tmp")
+    def crashWith(text: String): Unit = {
+      val out = fs.create(tmp, true)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+    // the owner died after writing the temp file, before the rename...
+    crashWith("2025-02-02T00:00:00Z")
     assert(cp.get("t").contains("2025-01-01T00:00:00Z"))
-    // ...and must not have repaired (both directories still in place
-    // for the owner's recovery to handle)
-    assert(fs.exists(old) && fs.exists(live))
-    // the owner's next save runs the repair and commits the new value
-    cp.save("t", "2025-02-02T00:00:00Z")
-    assert(cp.get("t").contains("2025-02-02T00:00:00Z"))
-    assert(!fs.exists(old))
+    // ...or mid-write, leaving it partial
+    crashWith("2025-0")
+    assert(cp.get("t").contains("2025-01-01T00:00:00Z"))
+    // a reader repairs nothing: the residue is left for the owner
+    assert(fs.exists(tmp))
+    // the owner's next save overwrites the residue and commits
+    cp.save("t", "2025-03-03T00:00:00Z")
+    assert(cp.get("t").contains("2025-03-03T00:00:00Z"))
+    assert(!fs.exists(tmp))
+    // a parquet checkpoint directory (the earlier format) holds no
+    // version: it reads as absent, which routes the Runner to a full load
+    Seq("2025-05-05T00:00:00Z").toDF("latest_timestamp")
+      .write.parquet(s"$dir/table_name=old")
+    assert(cp.get("old").isEmpty)
+  }
+
+  test("checkpoint get survives the owner completing its swap mid-read") {
+    import org.apache.hadoop.fs.Path
+    val dir = tmpDir() + "/cp"
+    val cp = new Checkpoint(spark, dir)
+    cp.save("t", "2025-03-03T00:00:00Z")
+    val tdir = new Path(s"$dir/table_name=t")
+    val fs = tdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def read(name: String): String = {
+      val in = fs.open(new Path(tdir, name))
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    def committed: Seq[String] = fs.listStatus(tdir).map(_.getPath.getName)
+      .filter(_.matches("v\\d+")).sorted.toSeq
+    // a reader listed v1 as newest; the owner then completes a whole
+    // save (rename to v2, prune) before the reader opens v1
+    cp.save("t", "2025-04-04T00:00:00Z")
+    assert(read("v1") == "2025-03-03T00:00:00Z",
+      "the version a racing reader listed must survive one save")
+    assert(cp.get("t").contains("2025-04-04T00:00:00Z"))
+    // the owner renamed v3 in but has not pruned yet: the newest wins
+    val out = fs.create(new Path(tdir, "v3"), false)
+    try out.write("2025-05-05T00:00:00Z".getBytes("UTF-8")) finally out.close()
+    assert(cp.get("t").contains("2025-05-05T00:00:00Z"))
+    // the next save commits v4 and keeps the newest two versions
+    cp.save("t", "2025-06-06T00:00:00Z")
+    assert(cp.get("t").contains("2025-06-06T00:00:00Z"))
+    assert(committed == Seq("v3", "v4"), "the newest two versions are kept")
   }
 
   test("rollup maintenance: merge equals full recompute, history partitions untouched") {
@@ -330,31 +367,5 @@ class RunnerSpec extends SparkSpec {
       batchId = Some(0), appId = "batch")
     val n = spark.read.parquet(agg).agg(sum($"n")).head().getLong(0)
     assert(n == 3L, "real data was discarded as already-applied")
-  }
-
-  test("checkpoint get survives the owner completing its swap mid-read") {
-    import org.apache.hadoop.fs.Path
-    val dir = tmpDir() + "/cp"
-    val cp = new Checkpoint(spark, dir)
-    cp.save("t", "2025-03-03T00:00:00Z")
-    // POST-COMMIT transient: the owner wrote the commit marker and is
-    // deleting the old copy file-by-file (it exists but is empty) — the
-    // reader must fall back to the live path, which holds the committed
-    // value. (Old-without-marker is the PRE-commit state: there the
-    // live path may be a partial copy, and an unreadable old must
-    // propagate, which the next assertion locks in.)
-    val live = new Path(s"$dir/table_name=t")
-    val old = new Path(s"$dir/.table_name=t.swap_old")
-    val mark = new Path(s"$dir/.table_name=t.swap_commit")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(old) // exists but unreadable as parquet (no files)
-    fs.create(mark, true).close()
-    assert(cp.get("t").contains("2025-03-03T00:00:00Z"),
-      "reader must fall back to live once the swap committed")
-    // PRE-commit: no marker -> the unreadable old copy must NOT be
-    // silently replaced by a read of the (possibly partial) live path
-    fs.delete(mark, false)
-    intercept[Exception] { cp.get("t") }
-    fs.delete(old, true)
   }
 }
