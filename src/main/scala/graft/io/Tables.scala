@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** Parquet table access for the driver-generated testdata star schema
@@ -12,6 +12,14 @@ import org.apache.spark.sql.types._
   * splittable columnar scans — at 100 TB the same call fans out to
   * row-group-granular tasks, with column pruning and predicate
   * pushdown supplied by Catalyst (see `PushedFilters` in explain).
+  *
+  * Tables the engine itself writes (the bars target, its staging
+  * copies, the stream sink's target, rollups) open through
+  * [[openWritten]] instead: one `listStatus` of the root, only the
+  * partition directories the caller keeps, and the schema from one
+  * footer read on the driver — no listing job and no footer job, which
+  * a bare `spark.read.parquet` of a table above 32 partition
+  * directories launches before it reads a byte.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -67,8 +75,7 @@ object Tables {
           val f = it.next()
           // mirror Spark's hidden-file filter ("_" AND "."): local-FS
           // ".part-*.crc" checksums must not inflate the census
-          val n = f.getPath.getName
-          if (f.isFile && !n.startsWith("_") && !n.startsWith(".")) {
+          if (f.isFile && visible(f)) {
             bytes += f.getLen; files += 1
           }
         }
@@ -110,6 +117,88 @@ object Tables {
       else df
     } else spark.read.parquet(path)
     if (floorHint) withScanFloor(spark, path, raw) else raw
+  }
+
+  /** Open an UNPARTITIONED table the engine wrote, without a Spark job:
+    * the schema comes from one data file's footer (see the partitioned
+    * overload), and the single root path lists serially on the driver. */
+  def openWritten(spark: SparkSession, path: String): DataFrame = {
+    val (fs, root) = rootOf(spark, path)
+    val files = fs.listStatus(root).filter(st => st.isFile && visible(st))
+    spark.read.schema(footerSchema(spark, files, path)).parquet(path)
+  }
+
+  /** Open a table the engine wrote, partitioned by `partCol`, reading
+    * only the partition directories whose unescaped value passes
+    * `keep` (`__HIVE_DEFAULT_PARTITION__` is passed as null). Launches
+    * no Spark job:
+    *  - the root is listed ONCE, skipping `.`- and `_`-prefixed entries
+    *    as Spark's own listing does, so swap residue, `.spark-staging-*`
+    *    and `_temporary` are never read;
+    *  - the data columns come from the Spark schema stored in the
+    *    footer of one data file, read on the driver — the single footer
+    *    Spark's inference would read in a job; `partType` is the
+    *    partition column's type, which the writer fixed;
+    *  - Spark gets the kept directories under `basePath`, so it lists
+    *    only those (serially up to
+    *    `spark.sql.sources.parallelPartitionDiscovery.threshold` paths;
+    *    a caller keeping more pays Spark's listing job for them).
+    * When nothing is kept the result is an empty frame of the same
+    * schema. The table must hold at least one data file. */
+  def openWritten(spark: SparkSession, path: String, partCol: String,
+                  partType: DataType)(keep: String => Boolean): DataFrame = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    val (fs, root) = rootOf(spark, path)
+    val prefix = partCol + "="
+    val parts = fs.listStatus(root).filter(st => st.isDirectory &&
+      visible(st) && st.getPath.getName.startsWith(prefix))
+    val kept = parts.filter { st =>
+      val v = ExternalCatalogUtils.unescapePathName(
+        st.getPath.getName.substring(prefix.length))
+      keep(if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null else v)
+    }
+    // the footer comes from a kept partition when there is one, so the
+    // common case lists no directory Spark does not list again anyway
+    val files = (kept.iterator ++ parts.iterator.filterNot(kept.contains))
+      .map(d => fs.listStatus(d.getPath).filter(st => st.isFile && visible(st)))
+      .find(_.nonEmpty).getOrElse(Array.empty)
+    val data = footerSchema(spark, files, path)
+    val schema = StructType(
+      data.filterNot(_.name == partCol) :+ StructField(partCol, partType))
+    if (kept.isEmpty) // every column nullable, as in a file scan
+      spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        StructType(schema.map(_.copy(nullable = true))))
+    else spark.read.schema(schema).option("basePath", path)
+      .parquet(kept.map(_.getPath.toString).toSeq: _*)
+  }
+
+  private def rootOf(spark: SparkSession, path: String) = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  /** Spark's listing skips `.`- and `_`-prefixed names. */
+  private def visible(st: org.apache.hadoop.fs.FileStatus): Boolean = {
+    val n = st.getPath.getName
+    !n.startsWith(".") && !n.startsWith("_")
+  }
+
+  /** The Spark schema a Spark writer stored in a footer (the
+    * `org.apache.spark.sql.parquet.row.metadata` key), from the first
+    * non-empty file of `files`. */
+  private def footerSchema(spark: SparkSession,
+                           files: Array[org.apache.hadoop.fs.FileStatus],
+                           table: String): StructType = {
+    val key = "org.apache.spark.sql.parquet.row.metadata"
+    val f = files.find(_.getLen > 0).getOrElse(
+      sys.error(s"openWritten: no data file under $table"))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+        f, spark.sparkContext.hadoopConfiguration))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(key)
+      finally reader.close()
+    require(json != null, s"openWritten: ${f.getPath} carries no Spark schema")
+    DataType.fromJson(json).asInstanceOf[StructType]
   }
 
   /** Dimension-table schema mirroring the reference's company CSV

@@ -143,10 +143,11 @@ object Layout {
     * Runner.loadIncremental and IncrementalAgg.maintain: a merged frame
     * that lazily READS the live table cannot overwrite it directly
     * (Spark refuses, correctly), so it lands in a hidden staging
-    * sibling first, is re-read, and only then dynamically overwrites
-    * exactly its partitions. ONE implementation on purpose — the crash
-    * windows of this cycle are subtle, and a drifted copy would get a
-    * fix to one call site only. Returns rows written.
+    * sibling first, is re-read (with the schema its footer carries, so
+    * the re-read launches no footer job), and only then dynamically
+    * overwrites exactly its partitions. ONE implementation on purpose —
+    * the crash windows of this cycle are subtle, and a drifted copy
+    * would get a fix to one call site only. Returns rows written.
     *
     * Crash honesty: dynamic overwrite's job commit deletes each matched
     * live partition then renames the staged one in — a driver crash
@@ -161,7 +162,7 @@ object Layout {
     val p = new Path(path)
     val stage = hiddenSibling(p, stageSuffix)
     merged.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    val staged = spark.read.parquet(stage.toString)
+    val staged = graft.io.Tables.openWritten(spark, stage.toString)
     val n = staged.count()
     staged.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")

@@ -81,7 +81,15 @@ object NoveltyIndex {
     * it). The per-doc scoring fold needs no broadcast at all (see the
     * attribution algebra at the `firsts` derivation below). The
     * directory-level `gb` prune still bounds how much history is read
-    * either way. */
+    * either way.
+    *
+    * Contract: `id` values are unique across batches (a replay under
+    * the same tag is the same batch, excluded from its own history).
+    * The per-doc fold credits a gram to the doc whose id holds the
+    * gram's first attribution, so a reused id would collect the
+    * history doc's credits for grams it does not contain; a batch id
+    * that equals a history attribution (`_hfirst`) of one of the
+    * batch's grams therefore fails the call before the store mutates. */
   def appendAndScore(spark: SparkSession, batch: DataFrame,
                      indexPath: String, text: String, id: String,
                      w: Int = 3, batchTag: Option[String] = None,
@@ -131,22 +139,32 @@ object NoveltyIndex {
       // then needs NO join back onto the batch's gram rows (the
       // [[DedupOps.noveltyScore]] algebra): a gram's _first can only
       // equal a BATCH doc's id when that doc is the gram's batch-min
-      // holder (ids are globally unique, so a history id never
+      // holder (ids are unique across batches, so a history id never
       // collides), and that doc contains the gram by construction —
       // so grouping the gram-bounded attribution table by _first IS
       // the per-doc novel count, and historical attributions drop out
       // in the doc-keyed left join below. n_grams is a direct
       // doc-keyed aggregate of the (persisted) gram table.
-      val firsts = summary.join(hist, Seq("gh"), "left")
-        .select(col("gh"),
-          least(col("first"), coalesce(col("_hfirst"), col("first")))
-            .as("_first"))
+      // The uniqueness contract is checked in the same fold: each
+      // history attribution also enters it, with no credit, so a batch
+      // id that equals a history _hfirst meets it in the doc join and
+      // fails the batch before the store mutates.
+      val credits = summary.join(hist, Seq("gh"), "left")
+        .select(explode(array(
+          struct(least(col("first"), coalesce(col("_hfirst"), col("first")))
+            .as("k"), lit(1L).as("c")),
+          struct(col("_hfirst").as("k"), lit(0L).as("c")))).as("e"))
+        .filter(col("e.k").isNotNull)
       val perDoc = grams.groupBy(col(id)).agg(count(lit(1)).as("n_grams"))
-      val novel = firsts.groupBy(col("_first"))
-        .agg(count(lit(1)).as("n_novel"))
+      val novel = credits.groupBy(col("e.k").as("_first"))
+        .agg(sum(col("e.c")).as("n_novel"), min(col("e.c")).as("_hist"))
       val out = perDoc.join(novel, perDoc(id) === novel("_first"), "left")
         .select(col(id), col("n_grams"),
-          coalesce(col("n_novel"), lit(0L)).as("n_novel"))
+          when(col("_hist") === 0, raise_error(concat(
+            lit("noveltyIndex: batch id "), col(id).cast("string"),
+            lit(" already attributes grams in the store; doc ids must be " +
+              "unique across batches"))))
+            .otherwise(coalesce(col("n_novel"), lit(0L))).as("n_novel"))
         .withColumn("novelty", graft.functions.Rounding.roundHalfUp(
           col("n_novel").cast("double") / col("n_grams"), 6))
         .localCheckpoint(true) // pin before the store mutates

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
 
 /** Mergeable partial aggregates for incrementally-maintained rollup
   * tables: the aggregate table stores only states that merge
@@ -123,12 +124,12 @@ object IncrementalAgg {
 
   /** Maintain the date-partitioned rollup at `aggPath` from one raw
     * batch: aggregate the batch to partials, read ONLY the rollup
-    * partitions for the batch's dates (pruned via an IN-list of the
-    * touched dates — bounded by days-per-batch, so the driver-side
-    * collect is a few values; a null date selects the null partition
-    * explicitly, since NULL IN (...) would silently drop it before the
-    * overwrite), merge, and dynamically overwrite just those
-    * partitions. Untouched history is never read or rewritten.
+    * partitions for the batch's dates (one per-date count of the
+    * partials names them — bounded by days-per-batch, so the
+    * driver-side collect is a few rows; a touched null date opens the
+    * null partition too, so the overwrite never drops it), merge, and
+    * dynamically overwrite just those partitions. Untouched history is
+    * never read or rewritten.
     *
     * `batchId = Some(id)` makes the application IDEMPOTENT per group
     * within the `appId` lineage (see [[mergeIdempotent]]) — pass the
@@ -146,40 +147,37 @@ object IncrementalAgg {
       .withColumn("last_batch_app", lit(appId))
     fresh.persist()
     try {
-      if (fresh.isEmpty) 0L
+      // ONE probe of the persisted partials: an empty result is an
+      // empty batch, and the touched dates and the row count both come
+      // from it (a null date is the null partition)
+      val byDate = fresh.groupBy("dt").count().collect()
+      if (byDate.isEmpty) 0L
       else {
         val tpath = new Path(aggPath)
         val hfs = tpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         // committed-data probe, not bare exists(): a first write that
         // crashed mid-job leaves the directory (with only _temporary/)
         // behind, and an existence probe would route the retry into
-        // spark.read.parquet on a schema-less dir — wedged forever
+        // reading a schema-less dir — wedged forever
         if (!graft.ops.Layout.hasCommittedFiles(hfs, tpath)) {
           // first write: nothing to merge and nothing being read from
           // the target, so the stage cycle below (full write + re-read +
-          // overwrite) would just double the IO — write directly.
-          // `fresh` is persisted, so the count costs no recompute.
-          val n = fresh.count()
+          // overwrite) would just double the IO — write directly
           fresh.write.mode(SaveMode.Overwrite)
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("dt").parquet(aggPath)
-          return n
+          return byDate.map(_.getLong(1)).sum
         }
-        val merged = {
-            val touched = fresh.select(col("dt")).distinct()
-              .collect().map(r => if (r.isNullAt(0)) null else r.getDate(0))
-            val dates = touched.filter(_ != null).toSeq
-            val dateFilter =
-              if (dates.nonEmpty) col("dt").isInCollection(dates) else lit(false)
-            val overlapFilter =
-              if (touched.contains(null)) dateFilter || col("dt").isNull
-              else dateFilter
-            val stored = spark.read.parquet(aggPath).filter(overlapFilter)
-            batchId match {
-              case Some(id) => mergeIdempotent(stored, fresh, keys, appId, id)
-              case None => merge(stored, fresh, keys)
-            }
-          }
+        // open only the touched partitions (one root listing, no Spark
+        // job); Spark writes a date partition as its ISO text
+        val touched =
+          byDate.map(r => if (r.isNullAt(0)) null else r.get(0).toString).toSet
+        val stored = graft.io.Tables.openWritten(
+          spark, aggPath, "dt", DateType)(touched.contains)
+        val merged = batchId match {
+          case Some(id) => mergeIdempotent(stored, fresh, keys, appId, id)
+          case None => merge(stored, fresh, keys)
+        }
         graft.ops.Layout.stagedDynamicOverwrite(
           spark, merged, aggPath, "dt", "stage_agg")
       }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
 import graft.meta.AuditLog
 import graft.ops.Upsert
 import graft.state.Checkpoint
@@ -26,11 +27,15 @@ import graft.state.Checkpoint
   * Scale design (the part the reference's row-store never had to solve):
   *  - The target is **partitioned by `dt`** (the date of the order
   *    column). An incremental run reads only the partitions at/after the
-  *    watermark date (partition pruning), upserts the batch into that
-  *    overlap slice, and writes back with **dynamic partition
-  *    overwrite** — only the partitions present in the merged batch are
-  *    replaced. A daily run against a 100 TB target therefore touches
-  *    one or two date partitions, never the full table.
+  *    watermark date, upserts the batch into that overlap slice, and
+  *    writes back with **dynamic partition overwrite** — only the
+  *    partitions present in the merged batch are replaced. A daily run
+  *    against a 100 TB target therefore touches one or two date
+  *    partitions, never the full table. The overlap read lists the
+  *    target root once and opens only the overlap partitions, with the
+  *    schema from one footer read on the driver
+  *    ([[graft.io.Tables.openWritten]]): no listing job and no footer
+  *    job, however many partitions the target holds.
   *  - All storage access goes through the Hadoop `FileSystem` API, so
   *    the same runner works on local FS, HDFS, and S3A.
   *  - The merged overlap is staged to a side directory before the
@@ -140,10 +145,13 @@ class Runner(spark: SparkSession, checkpoint: Checkpoint, audit: AuditLog) {
           val fromDate = wm.substring(0, 10)
           probed(withDt(source.filter(col(orderCol) >= lit(fromDate)),
               orderCol)) { (batch, _) =>
-            // only the overlap partitions of the target are read (pruned
-            // on the dt partition column) and only they are rewritten —
-            // via the shared staged dynamic-overwrite cycle
-            val overlap = spark.read.parquet(targetPath)
+            // only the overlap partitions of the target are opened (one
+            // root listing, no Spark job; ISO dates compare as text) and
+            // only they are rewritten — via the shared staged
+            // dynamic-overwrite cycle
+            val overlap = graft.io.Tables
+              .openWritten(spark, targetPath, "dt", DateType)(
+                d => d != null && d >= fromDate)
               .filter(col("dt") >= to_date(lit(fromDate)))
             val merged = Upsert.upsert(overlap, batch, keys)
             graft.ops.Layout.stagedDynamicOverwrite(

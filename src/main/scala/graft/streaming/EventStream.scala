@@ -53,10 +53,14 @@ object EventStream {
     *
     * Cost contract: each micro-batch re-reads and rewrites the WHOLE
     * target — right for the compact-state tables this mirrors (the
-    * reference's stock_bars). For a large, ever-growing target use the
-    * batch Runner's date-partitioned dynamic-partition-overwrite merge
-    * (only overlap partitions rewrite) or a transactional table format;
-    * a full-table upsert per batch is quadratic in table size.
+    * reference's stock_bars). Opening the target costs one root listing
+    * and one footer read on the driver, no Spark job
+    * ([[graft.io.Tables.openWritten]]); the Spark jobs of a micro-batch
+    * are the empty-batch probe and the merge-and-write. For a large,
+    * ever-growing target use the batch Runner's date-partitioned
+    * dynamic-partition-overwrite merge (only overlap partitions
+    * rewrite) or a transactional table format; a full-table upsert per
+    * batch is quadratic in table size.
     */
   def fileIngest(spark: SparkSession, srcDir: String, schema:
                  org.apache.spark.sql.types.StructType, targetPath: String,
@@ -92,7 +96,8 @@ object EventStream {
           val merged =
             if (fs.exists(target))
               graft.ops.Upsert.upsert(
-                spark2.read.parquet(targetPath), batch.toDF(), keys)
+                graft.io.Tables.openWritten(spark2, targetPath),
+                batch.toDF(), keys)
             else batch.toDF()
           merged.write.parquet(stage)
         }

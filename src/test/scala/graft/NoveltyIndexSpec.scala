@@ -166,6 +166,36 @@ class NoveltyIndexSpec extends SparkSpec {
     assert(s3(20L)._3 == 0.0, "post-heal probe must still see history")
   }
 
+  test("a batch id reused from history fails the batch; the store is unchanged") {
+    val idx = tmpDir() + "/nidx_reuse"
+    NoveltyIndex.appendAndScore(spark,
+      corpus.filter(_._1 < 10).toDF("doc_id", "text"), idx, "text",
+      "doc_id", batchTag = Some("b1"))
+    val before = NoveltyIndex.currentFirsts(spark, idx)
+      .as[(Long, Long)].collect().toSet
+    // id 2 returns with other text, while doc 13 repeats history doc
+    // 2's grams: their first attribution is id 2, which would credit
+    // the new doc 2 with grams it does not contain
+    val reused = Seq(
+      (2L, "brand new second batch material entirely"),
+      (13L, "totally fresh unrelated content words here"))
+      .toDF("doc_id", "text")
+    val e = intercept[Exception] {
+      NoveltyIndex.appendAndScore(spark, reused, idx, "text", "doc_id",
+        batchTag = Some("b2"))
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(msgs.contains("batch id 2") &&
+      msgs.contains("unique across batches"), msgs)
+    assert(NoveltyIndex.currentFirsts(spark, idx)
+      .as[(Long, Long)].collect().toSet == before,
+      "a failed batch mutated the store")
+    val landed = new java.io.File(s"$idx/grams").listFiles()
+      .filter(_.isDirectory).flatMap(_.list())
+    assert(!landed.contains("batch_tag=b2"), "the failed batch landed rows")
+  }
+
   test("empty batch returns empty and creates nothing; short docs drop") {
     val idx = tmpDir() + "/nidx"
     val out = NoveltyIndex.appendAndScore(spark,

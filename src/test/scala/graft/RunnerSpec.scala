@@ -145,6 +145,40 @@ class RunnerSpec extends SparkSpec {
       .select("close").as[Double].head() == 263.0)
   }
 
+  test("incremental round on a >32-partition target opens the overlap with no Spark job") {
+    val dir = tmpDir()
+    val cp = new Checkpoint(spark, s"$dir/cp")
+    val runner = new Runner(spark, cp, new AuditLog(spark, s"$dir/audit"))
+    val target = s"$dir/bars"
+    val keys = Seq("stock", "timestamp")
+    def ts(d: Int) =
+      java.time.LocalDate.of(2025, 9, 1).plusDays(d.toLong).toString + "T10:00:00Z"
+    val history = (0 until 40).flatMap(d =>
+      Seq(("TSLA", ts(d), 100.0 + d), ("AAPL", ts(d), 200.0 + d)))
+    runner.loadIncremental(history.toDF("stock", "timestamp", "close"),
+      target, "bars", keys, "timestamp")
+    assert(new java.io.File(target).list().count(_.startsWith("dt=")) == 40)
+
+    // restate the watermark day and add a new day
+    val batch = Seq(("TSLA", ts(39), 999.0), ("TSLA", ts(40), 140.0),
+      ("AAPL", ts(40), 240.0))
+    val (written, jobs) = JobCounter.during(spark) {
+      runner.loadIncremental(batch.toDF("stock", "timestamp", "close"),
+        target, "bars", keys, "timestamp")
+    }
+    assert(written == 4) // the two overlap-day rows plus the new day
+    // listing and footer jobs run outside any SQL execution; every job
+    // of this round is an action
+    assert(jobs.nonEmpty && jobs.forall(_.sqlExecution),
+      s"a table open launched a Spark job: $jobs")
+    val want = (history.filterNot(r => r._1 == "TSLA" && r._2 == ts(39)) ++ batch)
+      .sortBy(r => (r._2, r._1))
+    val got = spark.read.parquet(target).select("stock", "timestamp", "close")
+      .as[(String, String, Double)].collect().sortBy(r => (r._2, r._1)).toSeq
+    assert(got == want)
+    assert(cp.get("bars").contains(ts(40)))
+  }
+
   test("empty batches are safe: no crash on first load, no-op incremental") {
     val dir = tmpDir()
     val cp = new Checkpoint(spark, s"$dir/cp")
