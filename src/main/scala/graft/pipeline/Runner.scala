@@ -1,10 +1,10 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
-import graft.meta.AuditLog
+import graft.meta.{AuditLog, JobLabel}
 import graft.ops.Upsert
 import graft.state.Checkpoint
 
@@ -23,6 +23,15 @@ import graft.state.Checkpoint
   * Each stage is wrapped in its own try/catch that appends to the audit
   * log, mirroring the reference's two try/except domains. Operators stay
   * pure `DataFrame => DataFrame`; only this runner touches storage.
+  *
+  * Every Spark job a stage launches carries its [[graft.meta.JobLabel]]
+  * as the job description: `graft:extract` (landing and opening the
+  * fetch), `graft:load.probe` (the one-aggregate batch probe),
+  * `graft:load.merge` (the overlap upsert and its staged overwrite),
+  * `graft:load.full` (the full-load replace), `graft:rollup` and
+  * `graft:analysis`. The extract frame is lazy, so its scan runs in
+  * the load jobs that consume it. An audit record written inside a
+  * stage carries the label as its `stage`.
   *
   * Scale design (the part the reference's row-store never had to solve):
   *  - The target is **partitioned by `dt`** (the date of the order
@@ -84,11 +93,13 @@ class Runner(spark: SparkSession, checkpoint: Checkpoint, audit: AuditLog) {
     // swaps it in (the same Layout.replace as the streaming sink). The
     // accumulating-directory shape belongs to the streaming ingest
     // (BarsStream), which tracks files by name.
-    val pages = graft.ops.Layout.replace(spark, landDir) { stage =>
-      client.fetchAndLand(spark, stage, symbols, timeframe, start, end)
+    JobLabel.during(spark, "graft:extract") {
+      val pages = graft.ops.Layout.replace(spark, landDir) { stage =>
+        client.fetchAndLand(spark, stage, symbols, timeframe, start, end)
+      }
+      audit.log(s"extract: $pages page(s) landed at $landDir")
+      graft.io.JsonSource.readBars(spark, landDir)
     }
-    audit.log(s"extract: $pages page(s) landed at $landDir")
-    graft.io.JsonSource.readBars(spark, landDir)
   }
 
   /** One incremental load round. `source` is the already-extracted batch
@@ -125,8 +136,10 @@ class Runner(spark: SparkSession, checkpoint: Checkpoint, audit: AuditLog) {
       def probed(batch: DataFrame)(write: (DataFrame, Long) => Long): (Long, String) = {
         batch.persist()
         try {
-          val r = batch.agg(count(lit(1)), count(when(col("dt").isNull, 1)),
-            max(col(orderCol).cast("string"))).head()
+          val r = JobLabel.during(spark, "graft:load.probe") {
+            batch.agg(count(lit(1)), count(when(col("dt").isNull, 1)),
+              max(col(orderCol).cast("string"))).head()
+          }
           if (r.getLong(0) == 0) (0L, null)
           else {
             require(r.getLong(1) == 0,
@@ -145,17 +158,19 @@ class Runner(spark: SparkSession, checkpoint: Checkpoint, audit: AuditLog) {
           val fromDate = wm.substring(0, 10)
           probed(withDt(source.filter(col(orderCol) >= lit(fromDate)),
               orderCol)) { (batch, _) =>
-            // only the overlap partitions of the target are opened (one
-            // root listing, no Spark job; ISO dates compare as text) and
-            // only they are rewritten — via the shared staged
-            // dynamic-overwrite cycle
-            val overlap = graft.io.Tables
-              .openWritten(spark, targetPath, "dt", DateType)(
-                d => d != null && d >= fromDate)
-              .filter(col("dt") >= to_date(lit(fromDate)))
-            val merged = Upsert.upsert(overlap, batch, keys)
-            graft.ops.Layout.stagedDynamicOverwrite(
-              spark, merged, targetPath, "dt", "stage")
+            JobLabel.during(spark, "graft:load.merge") {
+              // only the overlap partitions of the target are opened
+              // (one root listing, no Spark job; ISO dates compare as
+              // text) and only they are rewritten — via the shared
+              // staged dynamic-overwrite cycle
+              val overlap = graft.io.Tables
+                .openWritten(spark, targetPath, "dt", DateType)(
+                  d => d != null && d >= fromDate)
+                .filter(col("dt") >= to_date(lit(fromDate)))
+              val merged = Upsert.upsert(overlap, batch, keys)
+              graft.ops.Layout.stagedDynamicOverwrite(
+                spark, merged, targetPath, "dt", "stage")
+            }
           }
         case _ =>
           // full load: the target (if any) is REPLACED wholesale, making
@@ -169,8 +184,10 @@ class Runner(spark: SparkSession, checkpoint: Checkpoint, audit: AuditLog) {
           // that lost the state store), swapping in an empty extract would
           // wipe the table and leave a schema-less path behind.
           probed(withDt(source, orderCol)) { (batch, n) =>
-            graft.ops.Layout.replace(spark, targetPath) { stage =>
-              batch.write.partitionBy("dt").parquet(stage)
+            JobLabel.during(spark, "graft:load.full") {
+              graft.ops.Layout.replace(spark, targetPath) { stage =>
+                batch.write.partitionBy("dt").parquet(stage)
+              }
             }
             n
           }
@@ -214,8 +231,10 @@ class Runner(spark: SparkSession, checkpoint: Checkpoint, audit: AuditLog) {
                         appId: String = "batch"): Long =
     try {
       audit.log(s"$table: rollup maintenance starting")
-      val written = IncrementalAgg.maintain(
-        spark, batch, aggPath, dateCol, keys, valueCol, batchId, appId)
+      val written = JobLabel.during(spark, "graft:rollup") {
+        IncrementalAgg.maintain(
+          spark, batch, aggPath, dateCol, keys, valueCol, batchId, appId)
+      }
       audit.log(s"$table: rollup maintenance complete, $written rows written")
       written
     } catch {
@@ -225,11 +244,16 @@ class Runner(spark: SparkSession, checkpoint: Checkpoint, audit: AuditLog) {
     }
 
   /** The analysis stage: its own failure domain, like the reference's
-    * second try/except (stock_bars.py:126-134). */
+    * second try/except (stock_bars.py:126-134). The output is replaced
+    * through [[graft.ops.Layout.replace]], so a body that fails, at
+    * planning or while its job runs, leaves the previous output in
+    * place. */
   def runAnalysis(name: String, out: String)(body: => DataFrame): Boolean =
     try {
       audit.log(s"$name: analysis starting")
-      body.write.mode(SaveMode.Overwrite).parquet(out)
+      JobLabel.during(spark, "graft:analysis") {
+        graft.ops.Layout.replace(spark, out)(stage => body.write.parquet(stage))
+      }
       audit.log(s"$name: analysis complete")
       true
     } catch {

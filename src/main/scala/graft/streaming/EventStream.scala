@@ -75,34 +75,36 @@ object EventStream {
   /** The micro-batch upsert body shared by every streaming ingest
     * ([[fileIngest]], [[BarsStream.ingest]]): dedup against the target
     * with the batch [[graft.ops.Upsert]] operator, then
-    * [[graft.ops.Layout.replace]] the target. */
+    * [[graft.ops.Layout.replace]] the target. Its jobs carry the
+    * `graft:stream.sink` [[graft.meta.JobLabel]]. */
   private[streaming] def upsertSink(targetPath: String, keys: Seq[String])
       : (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
     (batch, _) => {
-      // empty micro-batch (restart recovery, no new files) writes
-      // nothing — same contract as Runner.loadIncremental; without
-      // the guard an empty trigger would re-read and rewrite the
-      // whole target for zero new rows. (No `return` here: a return
-      // inside a lambda is a non-local return from the enclosing
-      // method, which has already returned — it would throw.)
-      if (!batch.isEmpty) {
-        val spark2 = batch.sparkSession
-        val target = new org.apache.hadoop.fs.Path(targetPath)
-        val fs = target
-          .getFileSystem(spark2.sparkContext.hadoopConfiguration)
-        // the merge lazily READS the live target, so it lands in the
-        // replace's staging dir first, then replaces the target whole
-        graft.ops.Layout.replace(spark2, targetPath) { stage =>
-          val merged =
-            if (fs.exists(target))
-              graft.ops.Upsert.upsert(
-                graft.io.Tables.openWritten(spark2, targetPath),
-                batch.toDF(), keys)
-            else batch.toDF()
-          merged.write.parquet(stage)
+      val spark2 = batch.sparkSession
+      graft.meta.JobLabel.during(spark2, "graft:stream.sink") {
+        // empty micro-batch (restart recovery, no new files) writes
+        // nothing — same contract as Runner.loadIncremental; without
+        // the guard an empty trigger would re-read and rewrite the
+        // whole target for zero new rows. (No `return` here: a return
+        // inside a lambda is a non-local return from the enclosing
+        // method, which has already returned — it would throw.)
+        if (!batch.isEmpty) {
+          val target = new org.apache.hadoop.fs.Path(targetPath)
+          val fs = target
+            .getFileSystem(spark2.sparkContext.hadoopConfiguration)
+          // the merge lazily READS the live target, so it lands in the
+          // replace's staging dir first, then replaces the target whole
+          graft.ops.Layout.replace(spark2, targetPath) { stage =>
+            val merged =
+              if (fs.exists(target))
+                graft.ops.Upsert.upsert(
+                  graft.io.Tables.openWritten(spark2, targetPath),
+                  batch.toDF(), keys)
+              else batch.toDF()
+            merged.write.parquet(stage)
+          }
         }
       }
-      ()
     }
 
   /** Gap-based sessionization on an unbounded stream: the streaming twin

@@ -179,6 +179,47 @@ class RunnerSpec extends SparkSpec {
     assert(cp.get("bars").contains(ts(40)))
   }
 
+  test("every Spark job of an incremental round carries its graft: stage label") {
+    val dir = tmpDir()
+    val runner = new Runner(spark, new Checkpoint(spark, s"$dir/cp"),
+      new AuditLog(spark, s"$dir/audit"))
+    val target = s"$dir/bars"
+    val keys = Seq("stock", "timestamp")
+    def ts(d: Int) =
+      java.time.LocalDate.of(2025, 9, 1).plusDays(d.toLong).toString + "T10:00:00Z"
+    runner.loadIncremental((0 until 40).flatMap(d =>
+        Seq(("TSLA", ts(d), 100.0 + d), ("AAPL", ts(d), 200.0 + d)))
+        .toDF("stock", "timestamp", "close"),
+      target, "bars", keys, "timestamp")
+    val (_, jobs) = JobCounter.during(spark) {
+      runner.loadIncremental(Seq(("TSLA", ts(39), 999.0), ("TSLA", ts(40), 140.0))
+        .toDF("stock", "timestamp", "close"), target, "bars", keys, "timestamp")
+    }
+    assert(jobs.nonEmpty && jobs.forall(j =>
+      j.description != null && j.description.startsWith("graft:")),
+      s"a job of the round carries no stage label: $jobs")
+    assert(jobs.map(_.description).toSet ==
+      Set("graft:load.probe", "graft:load.merge"))
+    // the round restores the caller's (empty) description
+    assert(graft.meta.JobLabel.current(spark).isEmpty)
+  }
+
+  test("a failed analysis run keeps the previous output") {
+    val dir = tmpDir()
+    val audit = new AuditLog(spark, s"$dir/audit")
+    val runner = new Runner(spark, new Checkpoint(spark, s"$dir/cp"), audit)
+    val out = s"$dir/analysis"
+    assert(runner.runAnalysis("a", out)(spark.range(0, 10, 1, 2).toDF("x")))
+    // the body plans fine and fails while its job runs
+    assert(!runner.runAnalysis("a", out) {
+      spark.range(0, 10, 1, 2).select(
+        when($"id" === 7, raise_error(lit("boom"))).otherwise($"id").as("x"))
+    })
+    assert(spark.read.parquet(out).as[Long].collect().sorted.toSeq == (0L until 10L),
+      "a failed analysis run destroyed the previous output")
+    assert(audit.read().filter($"log_message".contains("FAILED")).count() == 1)
+  }
+
   test("empty batches are safe: no crash on first load, no-op incremental") {
     val dir = tmpDir()
     val cp = new Checkpoint(spark, s"$dir/cp")
