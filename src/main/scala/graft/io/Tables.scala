@@ -13,8 +13,8 @@ import org.apache.spark.sql.types._
   * row-group-granular tasks, with column pruning and predicate
   * pushdown supplied by Catalyst (see `PushedFilters` in explain).
   *
-  * Tables the engine itself writes (the bars target, its staging
-  * copies, the stream sink's target, rollups) open through
+  * Tables the engine itself writes (the bars target, the stream
+  * sink's target, rollups) open through
   * [[openWritten]] instead: one `listStatus` of the root, only the
   * partition directories the caller keeps, and the schema from one
   * footer read on the driver — no listing job and no footer job, which
@@ -178,7 +178,7 @@ object Tables {
   }
 
   /** Spark's listing skips `.`- and `_`-prefixed names. */
-  private def visible(st: org.apache.hadoop.fs.FileStatus): Boolean = {
+  private[graft] def visible(st: org.apache.hadoop.fs.FileStatus): Boolean = {
     val n = st.getPath.getName
     !n.startsWith(".") && !n.startsWith("_")
   }

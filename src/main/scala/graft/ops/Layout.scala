@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
+import graft.io.Tables.visible
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
 
@@ -139,40 +140,6 @@ object Layout {
     s"auto_${s.toString(36)}_${r.getLong(1)}"
   }
 
-  /** The staged dynamic-partition-overwrite cycle shared by
-    * Runner.loadIncremental and IncrementalAgg.maintain: a merged frame
-    * that lazily READS the live table cannot overwrite it directly
-    * (Spark refuses, correctly), so it lands in a hidden staging
-    * sibling first, is re-read (with the schema its footer carries, so
-    * the re-read launches no footer job), and only then dynamically
-    * overwrites exactly its partitions. ONE implementation on purpose —
-    * the crash windows of this cycle are subtle, and a drifted copy
-    * would get a fix to one call site only. Returns rows written.
-    *
-    * Crash honesty: dynamic overwrite's job commit deletes each matched
-    * live partition then renames the staged one in — a driver crash
-    * between the two loses that partition's previous contents. Callers
-    * must sequence their watermark/token updates AFTER this returns, so
-    * a retry re-derives the lost partitions from the source; where the
-    * source may not retain the overlap, a table format with atomic
-    * commits is the right tool. */
-  private[graft] def stagedDynamicOverwrite(spark: SparkSession,
-      merged: DataFrame, path: String, partCol: String,
-      stageSuffix: String): Long = {
-    val p = new Path(path)
-    val stage = hiddenSibling(p, stageSuffix)
-    merged.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    val staged = graft.io.Tables.openWritten(spark, stage.toString)
-    val n = staged.count()
-    staged.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCol)
-      .parquet(path)
-    stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(stage, true)
-    n
-  }
-
   /** Repair the invariant after a crash mid-swap. Completion is
     * recorded by an explicit COMMIT MARKER, never inferred from the
     * live path existing — on stores whose rename is a copy (S3A) a
@@ -217,11 +184,12 @@ object Layout {
     * the partition tree — [[partitionDirs]] heals each level as it
     * lists. Writers only: a reader racing the owning writer must use
     * [[committedReadPath]] instead. Idempotent; cost is one listing per
-    * directory level. */
+    * partition directory, plus a few probes per crashed swap. */
   def healTable(fs: org.apache.hadoop.fs.FileSystem, p: Path): Unit = {
+    // partitionDirs returns its children healed, so below the root it only lists
+    def below(dir: Path): Unit = partitionDirs(fs, dir).foreach(below)
     recoverSwap(fs, p)
-    if (fs.exists(p) && fs.getFileStatus(p).isDirectory)
-      partitionDirs(fs, p).foreach(q => healTable(fs, q))
+    if (fs.exists(p) && fs.getFileStatus(p).isDirectory) below(p)
   }
 
   /** The last-known-complete copy of the table at `p`, for READ-ONLY
@@ -260,6 +228,43 @@ object Layout {
     val out = write(tmp.toString)
     swapInPlace(fs, tmp, p)
     out
+  }
+
+  /** Publish rewritten partitions of the table at `path`: the ONE
+    * crash-safe partition publish (Runner.loadIncremental,
+    * IncrementalAgg.maintain), [[replace]]'s shape per partition. Heals
+    * the crashed partition swaps under the root ([[partitionDirs]]),
+    * clears the hidden stage `<path>/.publish_tmp` and runs `write`
+    * with it: the caller writes its merge there ONCE, partitioned by
+    * the table's one partition column, and opens what it merges inside
+    * `write`, after the heal. Then swaps each staged partition in
+    * ([[swapInPlace]]; a new one is one rename) and deletes the stage;
+    * other partitions are untouched. Returns the rows staged, from
+    * their footers (no Spark job). A crash leaves each partition old or
+    * new and the stage hidden for the next call to clear; callers save
+    * their watermark or token after this returns and merge
+    * idempotently, so a retry after a crash between two swaps converges. */
+  def replacePartitions(spark: SparkSession, path: String)(
+      write: String => Unit): Long = {
+    val p = new Path(path)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = p.getFileSystem(conf)
+    if (fs.exists(p)) partitionDirs(fs, p)
+    val stage = new Path(p, ".publish_tmp")
+    fs.delete(stage, true)
+    write(stage.toString)
+    val staged = fs.listStatus(stage).filter(visible)
+    require(staged.forall(_.isDirectory),
+      s"replacePartitions: the write into $stage must be partitioned")
+    val rows = staged.flatMap(d => fs.listStatus(d.getPath))
+      .filter(f => f.isFile && visible(f)).map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+    staged.foreach(d => swapInPlace(fs, d.getPath, new Path(p, d.getPath.getName)))
+    fs.delete(stage, true)
+    rows
   }
 
   /** Move the complete table staged at `tmp` into `p` (healed by the
@@ -363,21 +368,26 @@ object Layout {
     * caller sizes or reads anything; without this a lost dt=X would
     * stay lost. Stale ".compact_tmp" staging (crash between staged
     * write and swap) is deleted outright — it is never authoritative
-    * and a concurrent recompaction could otherwise race on it. */
+    * and a concurrent recompaction could otherwise race on it. Only a
+    * name with a `.swap_old`/`.swap_commit` entry in the one listing
+    * can need [[recoverSwap]], so a clean partition costs no extra call. */
   private def partitionDirs(fs: org.apache.hadoop.fs.FileSystem,
                             dir: Path): Seq[Path] = {
     val HiddenState = """^\.(.+\=.*)\.(swap_old|swap_commit|compact_tmp)$""".r
-    val entries = fs.listStatus(dir).map(_.getPath.getName)
-    val hidden = entries.collect { case HiddenState(n, kind) => (n, kind) }
+    val listing = fs.listStatus(dir)
+    val hidden = listing.map(_.getPath.getName)
+      .collect { case HiddenState(n, kind) => (n, kind) }
     hidden.collect { case (n, "compact_tmp") => n }.foreach { n =>
       fs.delete(new Path(dir, "." + n + ".compact_tmp"), true)
     }
-    val names = (entries.filter(n =>
-      !n.startsWith(".") && !n.startsWith("_") && n.contains("=")) ++
-      hidden.collect { case (n, k) if k != "compact_tmp" => n }).distinct
-    val parts = names.map(n => new Path(dir, n)).toSeq
-    parts.foreach(q => recoverSwap(fs, q))
-    parts.filter(q => fs.exists(q) && fs.getFileStatus(q).isDirectory)
+    val crashed = hidden.collect { case (n, k) if k != "compact_tmp" => n }.distinct
+    crashed.foreach(n => recoverSwap(fs, new Path(dir, n)))
+    val clean = listing.filter(st => st.isDirectory && visible(st))
+      .map(_.getPath.getName)
+      .collect { case n if n.contains("=") && !crashed.contains(n) => new Path(dir, n) }
+    val healed = crashed.map(n => new Path(dir, n))
+      .filter(q => fs.exists(q) && fs.getFileStatus(q).isDirectory)
+    (clean ++ healed).toSeq
   }
 
   /** Consolidate stale `batch_tag=` partitions into one folded

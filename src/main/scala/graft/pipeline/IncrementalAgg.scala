@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
 
@@ -13,10 +13,9 @@ import org.apache.spark.sql.types.DateType
   * partials non-mergeable and force full recomputes.
   *
   * Scale story: a daily batch touching d dates re-aggregates d
-  * partitions of the rollup table, never the full history — the
-  * aggregate-table analogue of Runner.loadIncremental's dynamic
-  * partition overwrite. At 100 TB of detail, the rollup stays
-  * maintainable in O(batch) work per run.
+  * partitions of the rollup table, never the full history, published
+  * like Runner.loadIncremental's. At 100 TB of detail, the rollup
+  * stays maintainable in O(batch) work per run.
   */
 object IncrementalAgg {
 
@@ -127,17 +126,19 @@ object IncrementalAgg {
     * partitions for the batch's dates (one per-date count of the
     * partials names them — bounded by days-per-batch, so the
     * driver-side collect is a few rows; a touched null date opens the
-    * null partition too, so the overwrite never drops it), merge, and
-    * dynamically overwrite just those partitions. Untouched history is
-    * never read or rewritten.
+    * null partition too), merge, and publish just those partitions
+    * through [[graft.ops.Layout.replacePartitions]] (the first write
+    * publishes the partials alone). Untouched history is never read or
+    * rewritten.
     *
     * `batchId = Some(id)` makes the application IDEMPOTENT per group
     * within the `appId` lineage (see [[mergeIdempotent]]) — pass the
     * foreachBatch batch id from a streaming caller, or a run counter
-    * from an orchestrator that may retry a crashed run. `None` is the
-    * plain path where every call is new data (a retry after a partial
-    * crash WILL double-count on this path — give retryable callers a
-    * token). An empty batch writes nothing; returns rows written. */
+    * from an orchestrator that may retry a crashed run (the groups a
+    * crash already published keep their token). `None` is the plain
+    * path where every call is new data (a retry after a partial crash
+    * WILL double-count on this path — give retryable callers a token).
+    * An empty batch writes nothing; returns rows written. */
   def maintain(spark: SparkSession, batch: DataFrame, aggPath: String,
                dateCol: String, keys: Seq[String], valueCol: String,
                batchId: Option[Long] = None,
@@ -148,38 +149,32 @@ object IncrementalAgg {
     fresh.persist()
     try {
       // ONE probe of the persisted partials: an empty result is an
-      // empty batch, and the touched dates and the row count both come
-      // from it (a null date is the null partition)
+      // empty batch, and the touched dates come from it (a null date is
+      // the null partition)
       val byDate = fresh.groupBy("dt").count().collect()
       if (byDate.isEmpty) 0L
-      else {
+      else graft.ops.Layout.replacePartitions(spark, aggPath) { stage =>
         val tpath = new Path(aggPath)
         val hfs = tpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         // committed-data probe, not bare exists(): a first write that
         // crashed mid-job leaves the directory (with only _temporary/)
         // behind, and an existence probe would route the retry into
         // reading a schema-less dir — wedged forever
-        if (!graft.ops.Layout.hasCommittedFiles(hfs, tpath)) {
-          // first write: nothing to merge and nothing being read from
-          // the target, so the stage cycle below (full write + re-read +
-          // overwrite) would just double the IO — write directly
-          fresh.write.mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("dt").parquet(aggPath)
-          return byDate.map(_.getLong(1)).sum
-        }
-        // open only the touched partitions (one root listing, no Spark
-        // job); Spark writes a date partition as its ISO text
-        val touched =
-          byDate.map(r => if (r.isNullAt(0)) null else r.get(0).toString).toSet
-        val stored = graft.io.Tables.openWritten(
-          spark, aggPath, "dt", DateType)(touched.contains)
-        val merged = batchId match {
-          case Some(id) => mergeIdempotent(stored, fresh, keys, appId, id)
-          case None => merge(stored, fresh, keys)
-        }
-        graft.ops.Layout.stagedDynamicOverwrite(
-          spark, merged, aggPath, "dt", "stage_agg")
+        val merged =
+          if (!graft.ops.Layout.hasCommittedFiles(hfs, tpath)) fresh
+          else {
+            // open only the touched partitions (one root listing, no
+            // Spark job); Spark writes a date partition as its ISO text
+            val touched = byDate
+              .map(r => if (r.isNullAt(0)) null else r.get(0).toString).toSet
+            val stored = graft.io.Tables.openWritten(
+              spark, aggPath, "dt", DateType)(touched.contains)
+            batchId match {
+              case Some(id) => mergeIdempotent(stored, fresh, keys, appId, id)
+              case None => merge(stored, fresh, keys)
+            }
+          }
+        merged.write.partitionBy("dt").parquet(stage)
       }
     } finally { fresh.unpersist(); () }
   }

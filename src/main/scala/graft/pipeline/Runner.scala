@@ -27,7 +27,7 @@ import graft.state.Checkpoint
   * Every Spark job a stage launches carries its [[graft.meta.JobLabel]]
   * as the job description: `graft:extract` (landing and opening the
   * fetch), `graft:load.probe` (the one-aggregate batch probe),
-  * `graft:load.merge` (the overlap upsert and its staged overwrite),
+  * `graft:load.merge` (the overlap upsert and its partition publish),
   * `graft:load.full` (the full-load replace), `graft:rollup` and
   * `graft:analysis`. The extract frame is lazy, so its scan runs in
   * the load jobs that consume it. An audit record written inside a
@@ -37,32 +37,26 @@ import graft.state.Checkpoint
   *  - The target is **partitioned by `dt`** (the date of the order
   *    column). An incremental run reads only the partitions at/after the
   *    watermark date, upserts the batch into that overlap slice, and
-  *    writes back with **dynamic partition overwrite** — only the
-  *    partitions present in the merged batch are replaced. A daily run
-  *    against a 100 TB target therefore touches one or two date
-  *    partitions, never the full table. The overlap read lists the
+  *    publishes the merged partitions, written once and each swapped
+  *    in ([[graft.ops.Layout.replacePartitions]]) — only they are
+  *    replaced. A daily run against a 100 TB target therefore touches
+  *    one or two date partitions, never the full table. The overlap
+  *    read lists the
   *    target root once and opens only the overlap partitions, with the
   *    schema from one footer read on the driver
   *    ([[graft.io.Tables.openWritten]]): no listing job and no footer
   *    job, however many partitions the target holds.
   *  - All storage access goes through the Hadoop `FileSystem` API, so
   *    the same runner works on local FS, HDFS, and S3A.
-  *  - The merged overlap is staged to a side directory before the
-  *    overwrite (Spark refuses, correctly, to overwrite a path it is
-  *    reading; [[graft.ops.Layout.stagedDynamicOverwrite]], shared with
-  *    the rollup maintainer). Honesty about the commit: dynamic
-  *    overwrite's job commit deletes each matched live partition and
-  *    then renames the staged copy in — a driver crash between the two
-  *    loses that partition's PREVIOUS contents. The watermark only
-  *    advances after the overwrite returns, so the retry re-extracts
-  *    the overlap from the source and re-derives the partition; if the
-  *    source may not retain the overlap window, use a table format
-  *    with atomic commits instead.
+  *  - A crash leaves every partition old or new, and the publish heals
+  *    a crashed swap before the overlap is opened. The watermark only
+  *    advances after the publish returns, so a retry re-extracts the
+  *    overlap and the upsert re-merges it idempotently.
   *
   * Contract: the PK `keys` must functionally determine the order column
   * (in the reference, `timestamp` IS part of the PK,
   * assets/assets.py:150-164), so a key can never move between date
-  * partitions and per-partition overwrite preserves upsert semantics.
+  * partitions and replacing whole partitions preserves upsert semantics.
   */
 class Runner(spark: SparkSession, checkpoint: Checkpoint, audit: AuditLog) {
 
@@ -159,23 +153,23 @@ class Runner(spark: SparkSession, checkpoint: Checkpoint, audit: AuditLog) {
           probed(withDt(source.filter(col(orderCol) >= lit(fromDate)),
               orderCol)) { (batch, _) =>
             JobLabel.during(spark, "graft:load.merge") {
-              // only the overlap partitions of the target are opened
-              // (one root listing, no Spark job; ISO dates compare as
-              // text) and only they are rewritten — via the shared
-              // staged dynamic-overwrite cycle
-              val overlap = graft.io.Tables
-                .openWritten(spark, targetPath, "dt", DateType)(
-                  d => d != null && d >= fromDate)
-                .filter(col("dt") >= to_date(lit(fromDate)))
-              val merged = Upsert.upsert(overlap, batch, keys)
-              graft.ops.Layout.stagedDynamicOverwrite(
-                spark, merged, targetPath, "dt", "stage")
+              graft.ops.Layout.replacePartitions(spark, targetPath) { stage =>
+                // opened after the publish healed the root: only the
+                // overlap partitions (one root listing, no Spark job;
+                // ISO dates compare as text)
+                val overlap = graft.io.Tables
+                  .openWritten(spark, targetPath, "dt", DateType)(
+                    d => d != null && d >= fromDate)
+                  .filter(col("dt") >= to_date(lit(fromDate)))
+                Upsert.upsert(overlap, batch, keys)
+                  .write.partitionBy("dt").parquet(stage)
+              }
             }
           }
         case _ =>
           // full load: the target (if any) is REPLACED wholesale, making
           // "full extract -> create + insert" literally true. A lost
-          // checkpoint over an existing target must not dynamic-overwrite
+          // checkpoint over an existing target must not publish partitions
           // — that would replace only the batch's partitions and leave a
           // silent mix of old and new data. Layout.replace keeps the old
           // table recoverable until the new one is fully in place.
@@ -214,17 +208,17 @@ class Runner(spark: SparkSession, checkpoint: Checkpoint, audit: AuditLog) {
   /** Incrementally maintain a date-partitioned rollup table from a raw
     * batch: aggregate the batch to mergeable partials
     * ([[IncrementalAgg.partials]]), read ONLY the rollup partitions for
-    * the batch's dates (pruned via an IN-list of the touched dates —
-    * bounded by days-per-batch, so the driver-side collect is a few
-    * values), merge, and dynamically overwrite just those partitions.
-    * Untouched history is never read or rewritten — O(batch) work per
-    * run against an arbitrarily large rollup. Returns rows written.
+    * the batch's dates (bounded by days-per-batch, so the driver-side
+    * collect is a few values), merge, and publish just those partitions
+    * through [[graft.ops.Layout.replacePartitions]]. Untouched history
+    * is never read or rewritten — O(batch) work per run against an
+    * arbitrarily large rollup. Returns rows written.
     *
     * An empty batch writes nothing. First run creates the rollup from
     * the batch's partials alone. Orchestrators that may RETRY a crashed
     * run must pass a stable (`appId`, `batchId`) token — without one, a
-    * retry after a partially committed overwrite double-counts (see
-    * [[IncrementalAgg.maintain]]). */
+    * retry after a crash that published only some partitions
+    * double-counts those (see [[IncrementalAgg.maintain]]). */
   def maintainAggregate(batch: DataFrame, aggPath: String, table: String,
                         dateCol: String, keys: Seq[String], valueCol: String,
                         batchId: Option[Long] = None,

@@ -57,10 +57,10 @@ object EventStream {
     * and one footer read on the driver, no Spark job
     * ([[graft.io.Tables.openWritten]]); the Spark jobs of a micro-batch
     * are the empty-batch probe and the merge-and-write. For a large,
-    * ever-growing target use the batch Runner's date-partitioned
-    * dynamic-partition-overwrite merge (only overlap partitions
-    * rewrite) or a transactional table format; a full-table upsert per
-    * batch is quadratic in table size.
+    * ever-growing target use the batch Runner's date-partitioned merge,
+    * which writes and swaps in only the overlap partitions
+    * ([[graft.ops.Layout.replacePartitions]]), or a transactional table
+    * format; a full-table upsert per batch is quadratic in table size.
     */
   def fileIngest(spark: SparkSession, srcDir: String, schema:
                  org.apache.spark.sql.types.StructType, targetPath: String,

@@ -249,6 +249,107 @@ class LayoutSpec extends SparkSpec {
     assert(!fs.exists(new Path(staged)))
   }
 
+  /** (id, p) rows of a table partitioned by the string column `p`. */
+  private def idsByPart(dir: String): Seq[(Long, String)] =
+    spark.read.parquet(dir).select("id", "p").as[(Long, String)]
+      .collect().toSeq.sortBy(r => (Option(r._2), r._1))
+
+  /** A table of `n` rows starting at `from`, partitioned by `p`, in
+    * `files` files per partition. */
+  private def writeParts(dir: String, from: Long, n: Long, parts: Seq[String],
+                         files: Int = 1): Unit =
+    spark.range(from, from + n).select(col("id"),
+        element_at(typedLit(parts), (col("id") % parts.size + 1).cast("int")).as("p"))
+      .repartition(files).write.partitionBy("p").parquet(dir)
+
+  test("replacePartitions: a failed write leaves every live partition, the next call commits") {
+    val dir = Files.createTempDirectory("publish").toString + "/t"
+    writeParts(dir, 0, 30, Seq("a", "b", "c"))
+    val before = idsByPart(dir)
+    def files(part: String): Map[String, Long] =
+      new java.io.File(s"$dir/p=$part").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getName -> f.lastModified()).toMap
+    val untouched = Seq("a", "c").map(q => q -> files(q)).toMap
+    intercept[IllegalStateException] {
+      Layout.replacePartitions(spark, dir) { stage =>
+        writeParts(stage, 100, 10, Seq("b", "d")) // a partial merge...
+        throw new IllegalStateException("writer died") // ...then a crash
+      }
+    }
+    assert(idsByPart(dir) == before)
+    // the next call replaces b, adds d and leaves a and c alone
+    val n = Layout.replacePartitions(spark, dir) { stage =>
+      writeParts(stage, 200, 6, Seq("b", "d"))
+    }
+    assert(n == 6)
+    assert(idsByPart(dir) == (before.filter(_._2 != "b") ++
+      (200L until 206L).map(i => (i, if (i % 2 == 0) "b" else "d")))
+      .sortBy(r => (Option(r._2), r._1)))
+    assert(Seq("a", "c").map(q => q -> files(q)).toMap == untouched,
+      "a partition the write did not produce was rewritten")
+    assert(new java.io.File(dir).list().filterNot(_.contains("_SUCCESS")).toSeq.sorted ==
+      Seq("p=a", "p=b", "p=c", "p=d"), "stage or swap residue left in the root")
+  }
+
+  test("replacePartitions: a null partition value publishes") {
+    val dir = Files.createTempDirectory("publishnull").toString + "/t"
+    writeParts(dir, 0, 4, Seq("a", null))
+    val n = Layout.replacePartitions(spark, dir) { stage =>
+      writeParts(stage, 10, 3, Seq(null))
+    }
+    assert(n == 3)
+    assert(new java.io.File(s"$dir/p=__HIVE_DEFAULT_PARTITION__").isDirectory)
+    assert(idsByPart(dir) == Seq((0L, "a"), (2L, "a"), (10L, null), (11L, null), (12L, null))
+      .sortBy(r => (Option(r._2), r._1)))
+  }
+
+  test("replacePartitions: the first publish creates a missing root") {
+    val dir = Files.createTempDirectory("publishfirst").toString + "/t"
+    val n = Layout.replacePartitions(spark, dir) { stage =>
+      writeParts(stage, 0, 9, Seq("a", "b", "c"))
+    }
+    assert(n == 9)
+    assert(idsByPart(dir).map(_._1).sorted == (0L until 9L))
+    assert(new java.io.File(dir).list().toSeq.sorted == Seq("p=a", "p=b", "p=c"))
+  }
+
+  test("replacePartitions: the returned count equals the rows on disk") {
+    val dir = Files.createTempDirectory("publishcount").toString + "/t"
+    writeParts(dir, 0, 50, Seq("a", "b"))
+    // several files per partition: the count sums every staged footer
+    val n = Layout.replacePartitions(spark, dir) { stage =>
+      writeParts(stage, 1000, 777, Seq("b", "c", "d"), files = 4)
+    }
+    val published = spark.read.parquet(dir).filter(col("p") =!= "a").count()
+    assert(new java.io.File(s"$dir/p=c").list().count(_.endsWith(".parquet")) > 1)
+    assert(n == published && n == 777)
+  }
+
+  test("replacePartitions: leftover stage residue is cleared and never read") {
+    import org.apache.hadoop.fs.Path
+    val dir = Files.createTempDirectory("publishresidue").toString + "/t"
+    writeParts(dir, 0, 10, Seq("a"))
+    // a publish crashed after staging: its partitions sit in the stage
+    writeParts(s"$dir/.publish_tmp", 500, 20, Seq("a", "z"))
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(spark.read.parquet(dir).count() == 10)
+    assert(graft.io.Tables.openWritten(spark, dir, "p",
+      org.apache.spark.sql.types.StringType)(_ => true).count() == 10)
+    // a root holding only the residue holds no table
+    val bare = Files.createTempDirectory("publishbare").toString + "/t"
+    writeParts(s"$bare/.publish_tmp", 0, 3, Seq("a"))
+    assert(!Layout.hasCommittedFiles(fs, new Path(bare)))
+    val n = Layout.replacePartitions(spark, dir) { stage =>
+      assert(!fs.exists(new Path(stage)), "the stage was not cleared")
+      writeParts(stage, 900, 2, Seq("b"))
+    }
+    assert(n == 2)
+    assert(idsByPart(dir) == ((0L until 10L).map(i => (i, "a")) ++
+      Seq((900L, "b"), (901L, "b"))))
+    assert(!fs.exists(new Path(s"$dir/.publish_tmp")))
+  }
+
   test("writeZOrdered: preserves rows across the requested file count") {
     val dir = Files.createTempDirectory("zlayout").toString + "/t"
     val grid = spark.range(64).select(col("id").as("a"))

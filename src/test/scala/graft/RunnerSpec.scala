@@ -179,6 +179,39 @@ class RunnerSpec extends SparkSpec {
     assert(cp.get("bars").contains(ts(40)))
   }
 
+  test("a crashed partition swap under the target keeps the next round's rows") {
+    import org.apache.hadoop.fs.Path
+    val dir = tmpDir()
+    val cp = new Checkpoint(spark, s"$dir/cp")
+    val runner = new Runner(spark, cp, new AuditLog(spark, s"$dir/audit"))
+    val target = s"$dir/bars"
+    val keys = Seq("stock", "timestamp")
+    def ts(d: Int) = s"2025-10-0${d}T10:00:00Z"
+    val history = for (d <- 1 to 3; s <- Seq("AAPL", "MSFT", "TSLA"))
+      yield (s, ts(d), 100.0 * d + s.length)
+    runner.loadIncremental(history.toDF("stock", "timestamp", "close"),
+      target, "bars", keys, "timestamp")
+    // a partition compaction of the watermark day crashed after moving
+    // the live partition aside: only the hidden swap copy holds its rows
+    val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new Path(s"$target/dt=2025-10-03"),
+      new Path(s"$target/.dt=2025-10-03.swap_old")))
+    // the round restates one bar of that day and adds a day
+    val batch = Seq(("TSLA", ts(3), 99.0), ("AAPL", ts(4), 401.0),
+      ("TSLA", ts(4), 404.0))
+    runner.loadIncremental(batch.toDF("stock", "timestamp", "close"),
+      target, "bars", keys, "timestamp")
+    // the documented maintenance runs next; its heal must find nothing
+    // of the round's to undo
+    graft.ops.Layout.compactPartitions(spark, target)
+    val want = (history.filterNot(r => r._1 == "TSLA" && r._2 == ts(3)) ++ batch)
+      .sortBy(r => (r._2, r._1))
+    val got = spark.read.parquet(target).select("stock", "timestamp", "close")
+      .as[(String, String, Double)].collect().sortBy(r => (r._2, r._1)).toSeq
+    assert(got == want)
+    assert(cp.get("bars").contains(ts(4)))
+  }
+
   test("every Spark job of an incremental round carries its graft: stage label") {
     val dir = tmpDir()
     val runner = new Runner(spark, new Checkpoint(spark, s"$dir/cp"),
