@@ -133,8 +133,9 @@ object Tables {
     * `keep` (`__HIVE_DEFAULT_PARTITION__` is passed as null). Launches
     * no Spark job:
     *  - the root is listed ONCE, skipping `.`- and `_`-prefixed entries
-    *    as Spark's own listing does, so swap residue, `.spark-staging-*`
-    *    and `_temporary` are never read;
+    *    as Spark's own listing does, so swap residue, the publish stage
+    *    `.publish_tmp`, `_temporary` and any `.spark-staging-*` residue
+    *    in stores written by earlier builds are never read;
     *  - the data columns come from the Spark schema stored in the
     *    footer of one data file, read on the driver — the single footer
     *    Spark's inference would read in a job; `partType` is the

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental CLASSIFIER-CALIBRATION store — the monitoring half of
@@ -25,9 +25,10 @@ import org.apache.spark.sql.functions._
   * are no bucket directories: reads scan the store — which is
   * batches × curve points, never corpus-sized.
   *
-  * Replay safety: batches land in tag-scoped partitions via dynamic
-  * overwrite, so an at-least-once retry overwrites exactly its own
-  * partition — same `(appId-batchId)` scheme as every other sink. */
+  * Replay safety: batches land in tag-scoped partitions via
+  * [[Layout.replacePartitions]], so an at-least-once retry overwrites
+  * exactly its own partition — same `(appId-batchId)` scheme as every
+  * other sink. */
 object CalibrationIndex {
 
   private def aggPath(p: String) = p + "/scoreagg"
@@ -56,12 +57,11 @@ object CalibrationIndex {
     Layout.healTable(fs, new Path(aggPath(indexPath)))
     val tag = batchTag.getOrElse(
       Layout.contentTag(batch, batch.columns.toSeq))
-    summary
+    val rows = summary
       .select(lit(tag).as("batch_tag"), col("thr"), col("n"), col("pos"))
       .repartition(1) // one file per batch — the aggregate is tiny
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_tag").parquet(aggPath(indexPath))
+    Layout.replacePartitions(spark, aggPath(indexPath))(
+      rows.write.partitionBy("batch_tag").parquet(_))
   }
 
   /** The accumulated `(thr, n, pos)` aggregate with the monoid fold
@@ -251,13 +251,12 @@ object CalibrationIndex {
     Layout.healTable(fs, new Path(aggByPath(indexPath)))
     val tag = batchTag.getOrElse(
       Layout.contentTag(batch, batch.columns.toSeq))
-    summary
+    val rows = summary
       .select(lit(tag).as("batch_tag"), col(group), col("thr"),
         col("n"), col("pos"))
       .repartition(1)
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_tag").parquet(aggByPath(indexPath))
+    Layout.replacePartitions(spark, aggByPath(indexPath))(
+      rows.write.partitionBy("batch_tag").parquet(_))
   }
 
   /** The accumulated grouped aggregate with the monoid fold applied. */

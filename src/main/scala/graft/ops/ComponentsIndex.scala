@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental connected components over a PERSISTED label store — the
@@ -50,16 +50,17 @@ import org.apache.spark.sql.functions._
   *    membership — and the min-label rule confines it to affected
   *    components only.
   *
-  * Replay safety: rows land in tag-scoped partitions via dynamic
-  * overwrite (caller's `batchTag`, else a content tag from the pair
-  * set); a replay self-excludes its own tag when reading stored state,
-  * so it recomputes the first attempt's exact changed-set and
-  * overwrites it in place. Crash between the two table writes (byid
-  * first, on purpose): reads stay CORRECT — endpoint lookups see the
-  * new labels — but `bycomp/` misses the batch's member rows until the
-  * standard tagged retry heals it, so a merge landing in that window
-  * could under-relabel. Byid-first makes the crashed state consistent
-  * for readers; bycomp-first would let a later batch re-seed an id
+  * Replay safety: rows land in tag-scoped partitions via
+  * [[Layout.replacePartitions]] (caller's `batchTag`, else a content
+  * tag from the pair set); a replay self-excludes its own tag when
+  * reading stored state, so it recomputes the first attempt's exact
+  * changed-set and overwrites it in place. Crash between the two
+  * table writes (byid first, on purpose): reads stay CORRECT —
+  * endpoint lookups see the new labels — but `bycomp/` misses the
+  * batch's member rows until the standard tagged retry heals it, so
+  * a merge landing in that window could under-relabel. Byid-first
+  * makes the crashed state consistent for readers; bycomp-first
+  * would let a later batch re-seed an id
   * under a spurious fresh label.
   *
   * Contract: doc ids are globally unique and non-null; pairs are
@@ -180,18 +181,16 @@ object ComponentsIndex {
       // byid FIRST (see scaladoc crash discipline); one exchange per
       // table before the partitioned write so each bucket dir gets one
       // file per batch, not one per task
-      changed.select(bucketOf(col("id")).as("ib"),
+      val byId = changed.select(bucketOf(col("id")).as("ib"),
           lit(tag).as("batch_tag"), col("id"), col("component"))
         .repartition(NB, col("ib"))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ib", "batch_tag").parquet(byIdPath(indexPath))
-      changed.select(bucketOf(col("component")).as("cb"),
+      Layout.replacePartitions(spark, byIdPath(indexPath))(
+        byId.write.partitionBy("ib", "batch_tag").parquet(_))
+      val byComp = changed.select(bucketOf(col("component")).as("cb"),
           lit(tag).as("batch_tag"), col("component"), col("id"))
         .repartition(NB, col("cb"))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cb", "batch_tag").parquet(byCompPath(indexPath))
+      Layout.replacePartitions(spark, byCompPath(indexPath))(
+        byComp.write.partitionBy("cb", "batch_tag").parquet(_))
       out
     } finally { p.unpersist(); () }
   }

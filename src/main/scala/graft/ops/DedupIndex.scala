@@ -39,8 +39,8 @@ import graft.functions.Expressions.{band_keys, minhash_sig}
   *    [[Layout.compactPartitions]] as steady-state maintenance.
   *
   * Contract: doc ids are globally unique across batches. Replay
-  * safety: every batch lands in tag-scoped partitions via DYNAMIC
-  * partition overwrite — the caller's `batchTag` when given, else a
+  * safety: every batch lands in tag-scoped partitions via
+  * [[Layout.replacePartitions]] — the caller's `batchTag` when given, else a
   * [[Layout.contentTag]] derived from the batch's signatures — so a
   * replay with the same tag (explicit, or a BLIND retry of the same
   * batch re-deriving it) overwrites exactly its own partitions: the
@@ -70,7 +70,7 @@ object DedupIndex {
     require(k % bands == 0, "bands must divide signature length")
     require(!batchTag.contains("folded"),
       "batchTag 'folded' is reserved for foldBatches' consolidation " +
-        "partition: an append under it would dynamically OVERWRITE the " +
+        "partition: an append under it would OVERWRITE the " +
         "folded history and the probe's replay self-exclusion would " +
         "hide what remains")
     val sigsNew = batch
@@ -207,16 +207,15 @@ object DedupIndex {
       // owns its sizing.
       tag match {
         case Some(t) =>
-          sigsNew.select(lit(t).as("batch_tag"), col(id), col("sig"))
-            .write.mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_tag").parquet(sigsPath(indexPath))
-          newBands.select(col("band"), lit(t).as("batch_tag"),
+          val sigRows =
+            sigsNew.select(lit(t).as("batch_tag"), col(id), col("sig"))
+          Layout.replacePartitions(spark, sigsPath(indexPath))(
+            sigRows.write.partitionBy("batch_tag").parquet(_))
+          val bandRows = newBands.select(col("band"), lit(t).as("batch_tag"),
               col("bkey"), col(id))
             .repartition(bands, col("band"))
-            .write.mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("band", "batch_tag").parquet(bandsPath(indexPath))
+          Layout.replacePartitions(spark, bandsPath(indexPath))(
+            bandRows.write.partitionBy("band", "batch_tag").parquet(_))
         case None =>
           sigsNew.select(col(id), col("sig"))
             .write.mode(SaveMode.Append).parquet(sigsPath(indexPath))

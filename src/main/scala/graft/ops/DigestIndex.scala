@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental EXACT dedup against a PERSISTED digest store — the
@@ -28,10 +28,10 @@ import org.apache.spark.sql.functions._
   * isin — deterministic pruning), then broadcast-semi filters to the
   * batch's digests map-side: matched history is proportional to the
   * batch, the store is never shuffled, and the returned first-arrival
-  * set joins back to batch rows only. Appends land tag-scoped via
-  * dynamic partition overwrite with replay self-exclusion on the
+  * set joins back to batch rows only. Appends land tag-scoped through
+  * [[Layout.replacePartitions]] with replay self-exclusion on the
   * probe, so an at-least-once retry returns the same first-arrival
-  * set and overwrites exactly its own partition.
+  * set and replaces exactly its own `db=/batch_tag=` leaves.
   *
   * Contract: doc ids globally unique, non-null text. First-arrival
   * semantics for [[appendAndDedup]]'s RETURN (history wins over the
@@ -47,8 +47,10 @@ object DigestIndex {
 
   /** Return the batch rows that are FIRST ARRIVALS (digest unseen in
     * history; smallest id within the batch for a batch-new digest),
-    * materialized before the store mutates; then append the batch's
-    * per-digest summary rows. */
+    * materialized before the store mutates; then publish the batch's
+    * per-digest summary rows as its own `batch_tag` leaf under each
+    * touched `db` bucket ([[Layout.replacePartitions]]: a new leaf is
+    * one rename, a replayed one swaps in; sibling tags are untouched). */
   def appendAndDedup(spark: SparkSession, batch: DataFrame,
                      indexPath: String, text: String, id: String,
                      batchTag: Option[String] = None): DataFrame = {
@@ -94,12 +96,11 @@ object DigestIndex {
         .localCheckpoint(true) // pin before the store mutates
       // one exchange on db before the partitioned write: each touched
       // bucket dir gets exactly one file per batch, not one per task
-      summary.select(bucketOf(col("digest")).as("db"),
+      val rows = summary.select(bucketOf(col("digest")).as("db"),
           lit(tag).as("batch_tag"), col("digest"), col("id"), col("n"))
         .repartition(NB, col("db"))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("db", "batch_tag").parquet(digestsPath(indexPath))
+      Layout.replacePartitions(spark, digestsPath(indexPath))(
+        rows.write.partitionBy("db", "batch_tag").parquet(_))
       summary.unpersist()
       out
     } finally { dig.unpersist(); () }

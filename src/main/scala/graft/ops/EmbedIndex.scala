@@ -61,7 +61,7 @@ import graft.functions.Rounding.roundHalfUp
   * drops the whole bucket — the same honesty note as [[DedupIndex]]).
   *
   * Replay safety mirrors [[DedupIndex]]: batches land in tag-scoped
-  * partitions via dynamic partition overwrite (caller's `batchTag`, or
+  * partitions via [[Layout.replacePartitions]] (caller's `batchTag`, or
   * a [[Layout.contentTag]] derived from (id, vec)), the probe excludes
   * the replay's own tag, so a blind retry returns the identical pair
   * set over a pristine history. Steady-state maintenance:
@@ -273,11 +273,10 @@ object EmbedIndex {
       // touched partition per batch (the DedupIndex band idiom)
       tag match {
         case Some(t) =>
-          rows.withColumn("batch_tag", lit(t))
+          val tagged = rows.withColumn("batch_tag", lit(t))
             .repartition(BucketGroups, col("bg"))
-            .write.mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bg", "batch_tag").parquet(vecsPath(indexPath))
+          Layout.replacePartitions(spark, vecsPath(indexPath))(
+            tagged.write.partitionBy("bg", "batch_tag").parquet(_))
         case None =>
           rows.repartition(BucketGroups, col("bg"))
             .write.mode(SaveMode.Append).partitionBy("bg")

@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   *
   * Contract: doc ids are globally unique across batches. Replay safety
   * mirrors [[DedupIndex]]: every batch lands in tag-scoped partitions
-  * via dynamic partition overwrite — the caller's `batchTag` when
+  * via [[Layout.replacePartitions]] — the caller's `batchTag` when
   * given, else a [[Layout.contentTag]] derived from the batch's anchor
   * contexts — so a replay (explicit or a BLIND retry of the same
   * batch) overwrites exactly its own rows and returns identical pairs.
@@ -62,7 +62,7 @@ object ExactSubstrIndex {
                          batchTag: Option[String] = None): DataFrame = {
     require(!batchTag.contains("folded"),
       "batchTag 'folded' is reserved for foldBatches' consolidation " +
-        "partition: an append under it would dynamically OVERWRITE the " +
+        "partition: an append under it would OVERWRITE the " +
         "folded history and the probe's replay self-exclusion would " +
         "hide what remains")
     val ctxNew = batchContexts(batch, text, id, k, w, maxExt).persist()
@@ -98,12 +98,11 @@ object ExactSubstrIndex {
       // with it each hb dir gets exactly one file per batch
       tag match {
         case Some(t) =>
-          ctxNew.select(col("hb"), lit(t).as("batch_tag"), col(id),
+          val rows = ctxNew.select(col("hb"), lit(t).as("batch_tag"), col(id),
               col("h"), col("pre"), col("post"), col("c"))
             .repartition(HB, col("hb"))
-            .write.mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("hb", "batch_tag").parquet(anchorsPath(indexPath))
+          Layout.replacePartitions(spark, anchorsPath(indexPath))(
+            rows.write.partitionBy("hb", "batch_tag").parquet(_))
         case None =>
           ctxNew.select(col("hb"), col(id), col("h"), col("pre"),
               col("post"), col("c"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import graft.io.Tables.visible
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
@@ -98,18 +98,20 @@ object Layout {
       val f = it.next().getPath
       // a file only counts if NO ancestor inside p is committer/staging
       // state: `_temporary/` (FileOutputCommitter) AND any `.`- or
-      // `_`-prefixed directory — dynamic partition overwrite stages
-      // task-committed files under `.spark-staging-<job>/`, which
-      // Spark's reader skips but a bare name check on the FILE would
-      // count, reproducing the exact unreadable-table wedge this
-      // helper exists to prevent. The walk must stop AT the table root
-      // by Path equality against the QUALIFIED root: listFiles returns
-      // scheme-qualified paths (file:/..., hdfs://host:port/...), so a
-      // string-length comparison against an unqualified `p` would keep
-      // walking into — and name-check — the table's own absolute path,
-      // and any hidden-prefixed ancestor ABOVE the table would discount
-      // every committed file (table treated as absent ⇒ first-write
-      // overwrite of merged history downstream).
+      // `_`-prefixed directory — the publish stage `.publish_tmp/`
+      // ([[replacePartitions]]) and the `.spark-staging-<job>/` residue
+      // that Spark's dynamic partition overwrite left in stores written
+      // by earlier builds hold data files that Spark's reader skips but
+      // a bare name check on the FILE would count, reproducing the exact
+      // unreadable-table wedge this helper exists to prevent. The walk
+      // must stop AT the table root by Path equality against the
+      // QUALIFIED root: listFiles returns scheme-qualified paths
+      // (file:/..., hdfs://host:port/...), so a string-length comparison
+      // against an unqualified `p` would keep walking into — and
+      // name-check — the table's own absolute path, and any
+      // hidden-prefixed ancestor ABOVE the table would discount every
+      // committed file (table treated as absent ⇒ first-write overwrite
+      // of merged history downstream).
       val hiddenAncestor = Iterator.iterate(f.getParent)(_.getParent)
         .takeWhile(q => q != null && q != qp)
         .exists(q => q.getName.startsWith("_") || q.getName.startsWith("."))
@@ -125,11 +127,12 @@ object Layout {
     * `cols`) plus the row count, hex-encoded partition-value-safe.
     * The incremental indexes derive their default batch tag from this,
     * so a blind retry of the same batch lands on the SAME tag and
-    * dynamic partition overwrite replaces the first attempt instead of
-    * double-appending it (ADVICE r10). Distinct batches collide only
-    * on a 64-bit hash collision AND equal counts; identical content
-    * from different batches is impossible under the indexes' globally-
-    * unique-id contract (identical rows ⇒ identical ids ⇒ same batch). */
+    * [[replacePartitions]] swaps that tag's leaves over the first
+    * attempt's instead of double-appending it. Distinct batches
+    * collide only on a 64-bit hash collision AND equal counts;
+    * identical content from different batches is impossible under the
+    * indexes' globally-unique-id contract (identical rows ⇒ identical
+    * ids ⇒ same batch). */
   private[ops] def contentTag(df: DataFrame, cols: Seq[String]): String = {
     // decimal sum: a long sum of 64-bit hashes overflows under ANSI
     val r = df.agg(
@@ -231,40 +234,62 @@ object Layout {
   }
 
   /** Publish rewritten partitions of the table at `path`: the ONE
-    * crash-safe partition publish (Runner.loadIncremental,
-    * IncrementalAgg.maintain), [[replace]]'s shape per partition. Heals
-    * the crashed partition swaps under the root ([[partitionDirs]]),
-    * clears the hidden stage `<path>/.publish_tmp` and runs `write`
-    * with it: the caller writes its merge there ONCE, partitioned by
-    * the table's one partition column, and opens what it merges inside
-    * `write`, after the heal. Then swaps each staged partition in
-    * ([[swapInPlace]]; a new one is one rename) and deletes the stage;
-    * other partitions are untouched. Returns the rows staged, from
-    * their footers (no Spark job). A crash leaves each partition old or
-    * new and the stage hidden for the next call to clear; callers save
-    * their watermark or token after this returns and merge
-    * idempotently, so a retry after a crash between two swaps converges. */
+    * crash-safe partition publish (the Runner, rollups, every tagged
+    * index and index sink), [[replace]]'s shape per partition. Heals
+    * the crashed swaps under the root ([[partitionDirs]]), clears the
+    * hidden stage `<path>/.publish_tmp` and runs `write` with it: the
+    * caller writes ONCE there, partitioned as the table is (any
+    * depth), and opens what it merges inside `write`, after the heal.
+    * Then walks the stage: a staged directory with no live counterpart
+    * moves in whole (one rename); one that holds files swaps in
+    * ([[swapInPlace]]); any other is recursed into, its live
+    * counterpart listed and healed by [[partitionDirs]]. What the
+    * write did not produce is untouched. Deletes the stage; returns
+    * the rows staged, from the staged files' footers (no Spark job). A
+    * crash leaves each leaf old or new and the stage hidden for the
+    * next call to clear; callers save their watermark or token after
+    * this returns and write idempotently, so a retry converges. */
   def replacePartitions(spark: SparkSession, path: String)(
       write: String => Unit): Long = {
     val p = new Path(path)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = p.getFileSystem(conf)
-    if (fs.exists(p)) partitionDirs(fs, p)
+    val live = if (fs.exists(p)) partitionDirs(fs, p) else Nil
     val stage = new Path(p, ".publish_tmp")
     fs.delete(stage, true)
     write(stage.toString)
-    val staged = fs.listStatus(stage).filter(visible)
+    def entries(dir: Path) = fs.listStatus(dir).filter(visible).toSeq
+    // built once: the default read options load a fresh Hadoop
+    // Configuration, about 12 ms per footer on a 4-vCPU VM
+    val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+    def rows(sts: Seq[FileStatus]): Long = sts.map { st =>
+      if (st.isDirectory) rows(entries(st.getPath))
+      else {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf), opts)
+        try r.getRecordCount finally r.close()
+      }
+    }.sum
+    // `dirs` are staged; `into` is their live parent, `have` its children
+    def publish(dirs: Seq[FileStatus], into: Path,
+                have: Seq[Path]): Long = dirs.map { d =>
+      val to = new Path(into, d.getPath.getName)
+      val sub = entries(d.getPath)
+      val isLive = have.exists(_.getName == to.getName)
+      if (isLive && !sub.exists(_.isFile)) publish(sub, to, partitionDirs(fs, to))
+      else {
+        val n = rows(sub)
+        if (isLive) swapInPlace(fs, d.getPath, to)
+        else require(fs.rename(d.getPath, to), s"publish: could not move ${d.getPath}")
+        n
+      }
+    }.sum
+    val staged = entries(stage)
     require(staged.forall(_.isDirectory),
       s"replacePartitions: the write into $stage must be partitioned")
-    val rows = staged.flatMap(d => fs.listStatus(d.getPath))
-      .filter(f => f.isFile && visible(f)).map { f =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-        try r.getRecordCount finally r.close()
-      }.sum
-    staged.foreach(d => swapInPlace(fs, d.getPath, new Path(p, d.getPath.getName)))
+    val n = publish(staged, p, live)
     fs.delete(stage, true)
-    rows
+    n
   }
 
   /** Move the complete table staged at `tmp` into `p` (healed by the

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental NOVELTY scoring against a PERSISTED gram-attribution
@@ -51,9 +51,10 @@ import org.apache.spark.sql.functions._
   * first-arrival-vs-min-fold stance); the STORE still converges to
   * the order-free global min either way.
   *
-  * Replay safety: batches land in tag-scoped partitions via dynamic
-  * overwrite with probe self-exclusion, so an at-least-once retry
-  * returns the same scores and overwrites exactly its own partition.
+  * Replay safety: batches land in tag-scoped partitions via
+  * [[Layout.replacePartitions]] with probe self-exclusion, so an
+  * at-least-once retry returns the same scores and overwrites exactly
+  * its own partition.
   * Contract: doc ids globally unique; docs with fewer than `w` tokens
   * (or null text) carry no grams and are absent from the result. */
 object NoveltyIndex {
@@ -170,12 +171,11 @@ object NoveltyIndex {
         .localCheckpoint(true) // pin before the store mutates
       // one exchange on gb before the partitioned write: each touched
       // bucket dir gets exactly one file per batch, not one per task
-      summary.select(bucketOf(col("gh")).as("gb"),
+      val rows = summary.select(bucketOf(col("gh")).as("gb"),
           lit(tag).as("batch_tag"), col("gh"), col("first"))
         .repartition(NB, col("gb"))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("gb", "batch_tag").parquet(gramsPath(indexPath))
+      Layout.replacePartitions(spark, gramsPath(indexPath))(
+        rows.write.partitionBy("gb", "batch_tag").parquet(_))
       summary.unpersist()
       out
     } finally { grams.unpersist(); () }

@@ -61,8 +61,8 @@ object PqDiskIndex {
     // A rebuild replaces the WHOLE encoded table, not just the base
     // generation: an index that has accreted append/folded tag
     // partitions holds codes encoded under the OLD books — retraining
-    // and then landing only `batch_tag=base` via dynamic overwrite
-    // would leave those stale codes live, and search would silently
+    // and then publishing only `batch_tag=base` would leave those
+    // stale codes live, and search would silently
     // decode them against the NEW books (exactly the wrong-books
     // failure the meta marker exists to make loud). Heal any crashed
     // compact swap first so the delete removes the committed copy and
@@ -80,28 +80,29 @@ object PqDiskIndex {
     idx.coarse.get.map { case (cid, cw) => (cid, cw.toSeq) }
       .toDF("cid", "cvec")
       .write.mode(SaveMode.Overwrite).parquet(coarsePath(indexPath))
-    // tag-scoped layout (batch_tag=base): appends land their own tag
-    // partitions via dynamic overwrite, so blind retries are
+    // tag-scoped layout (batch_tag=base): appends publish their own tag
+    // partitions (Layout.replacePartitions), so blind retries are
     // replay-idempotent — range clustering on `cluster` holds WITHIN
     // each tag partition, which is what the probe's per-file min/max
     // pruning needs
-    writeTagged(idx.enc, encPath(indexPath), "base", numFiles,
-      SaveMode.Overwrite)
+    writeTagged(idx.enc, encPath(indexPath), "base", numFiles)
     val out = fs.create(metaPath(indexPath), true)
     try out.write(s"${idx.m} ${idx.d}".getBytes("UTF-8")) finally out.close()
   }
 
   /** Range-cluster on `cluster` inside one `batch_tag` partition and
-    * land it via dynamic partition overwrite — the tag discipline of
-    * the other indexes applied to the range-clustered layout. */
+    * publish it with [[Layout.replacePartitions]] — the tag discipline
+    * of the other indexes applied to the range-clustered layout. Only
+    * that tag's partition is replaced, so [[compact]]'s writes of
+    * distinct tags into one stage all stay. */
   private def writeTagged(enc: DataFrame, path: String, tag: String,
-                          numFiles: Int, mode: SaveMode): Unit =
-    enc.withColumn("batch_tag", lit(tag))
+                          numFiles: Int): Unit = {
+    val rows = enc.withColumn("batch_tag", lit(tag))
       .repartitionByRange(numFiles, col("cluster"))
       .sortWithinPartitions(col("cluster"))
-      .write.mode(mode)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_tag").parquet(path)
+    Layout.replacePartitions(enc.sparkSession, path)(
+      rows.write.partitionBy("batch_tag").parquet(_))
+  }
 
   private def readMeta(spark: SparkSession, indexPath: String): (Int, Int) = {
     val fs = fsFor(spark, indexPath)
@@ -145,7 +146,7 @@ object PqDiskIndex {
     * the base build, so probe pruning keeps working as it accretes.
     * Replay-idempotent: the batch lands in its own `batch_tag`
     * partition (caller's tag, else a content tag over the encoded
-    * rows) via dynamic overwrite, so a blind retry overwrites exactly
+    * rows) via [[Layout.replacePartitions]], so a blind retry overwrites exactly
     * its own partition instead of double-appending. An index built by
     * a pre-tagging version (no `batch_tag` partition) keeps appending
     * untagged — mixing the layouts breaks partition discovery — with
@@ -184,7 +185,7 @@ object PqDiskIndex {
       writeTagged(enc, encPath(indexPath),
         batchTag.getOrElse(Layout.contentTag(enc,
           "neighbor_id" +: "cluster" +: (0 until idx.m).map(j => s"_c$j"))),
-        numFiles, SaveMode.Overwrite)
+        numFiles)
   }
 
   /** Re-cluster the accreted encoded table back into `numFiles`
@@ -224,10 +225,10 @@ object PqDiskIndex {
         writeTagged(
           cur.filter(!col("batch_tag").isInCollection(keepTags.toSeq :+ ""))
             .drop("batch_tag"),
-          tmp, "folded", numFiles, SaveMode.Overwrite)
+          tmp, "folded", numFiles)
         kept.foreach(t => writeTagged(
           cur.filter(col("batch_tag") === t).drop("batch_tag"),
-          tmp, t, math.max(1, numFiles / 8), SaveMode.Overwrite))
+          tmp, t, math.max(1, numFiles / 8)))
       } else
         Layout.writeRangeClustered(cur, tmp, Seq("cluster"), numFiles)
     }

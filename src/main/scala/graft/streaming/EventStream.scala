@@ -165,15 +165,15 @@ object EventStream {
     * is checked against the persisted MinHash band index
     * ([[graft.ops.DedupIndex.appendAndFindDups]] — O(batch), history
     * never re-hashed) and the discovered pairs append to `pairsPath`.
-    * At-least-once: a replayed batch re-appends its bands and re-emits
     * REPLAY-IDEMPOTENT: bands and pairs land in per-batch
-    * `(appId-batchId)` partitions via dynamic partition overwrite, so a
-    * foreachBatch replay overwrites exactly its own partitions instead
-    * of double-appending (DedupIndex's tagged mode). `appId` scopes the
-    * tags to this query lineage — change it whenever the stream's
-    * checkpointLocation is reset, or the restarted stream's batch 0
-    * would overwrite the old lineage's batch-0 partitions. Caller
-    * starts the returned writer with a checkpointLocation. */
+    * `(appId-batchId)` partitions through
+    * [[graft.ops.Layout.replacePartitions]], so a foreachBatch replay
+    * replaces exactly its own partitions instead of double-appending
+    * (DedupIndex's tagged mode). `appId` scopes the tags to this query
+    * lineage — change it whenever the stream's checkpointLocation is
+    * reset, or the restarted stream's batch 0 would overwrite the old
+    * lineage's batch-0 partitions. Caller starts the returned writer
+    * with a checkpointLocation. */
   def nearDupSink(docsStream: DataFrame, indexPath: String,
                   pairsPath: String, text: String, id: String,
                   appId: String, threshold: Double = 0.5)
@@ -183,16 +183,20 @@ object EventStream {
       val pairs = graft.ops.DedupIndex.appendAndFindDups(
         batch.sparkSession, batch, indexPath, text, id,
         threshold = threshold, batchTag = Some(tag))
-      // an empty pair set writes nothing — never a schema-less dir.
-      // (A replay whose first run wrote pairs rewrites the same pairs:
-      // the pair set is deterministic given the same batch + index.)
-      if (!pairs.isEmpty)
-        pairs.withColumn("batch_tag", lit(tag))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_tag").parquet(pairsPath)
-      ()
+      // (a replay whose first run wrote pairs rewrites the same pairs:
+      // the pair set is deterministic given the same batch + index)
+      publishTagged(pairs, pairsPath, tag)
     }
+
+  /** Publish `rows` as the `batch_tag=<tag>` partition of `path`
+    * ([[graft.ops.Layout.replacePartitions]]): a replay of the tag
+    * replaces exactly that partition, every other tag is untouched. An
+    * empty `rows` writes nothing — never a schema-less dir. */
+  private def publishTagged(rows: DataFrame, path: String, tag: String): Unit =
+    if (!rows.isEmpty)
+      graft.ops.Layout.replacePartitions(rows.sparkSession, path)(
+        rows.withColumn("batch_tag", lit(tag))
+          .write.partitionBy("batch_tag").parquet(_))
 
   /** Streaming SEMANTIC near-dup detection over a persisted
     * [[graft.ops.EmbedIndex]] — the embedding twin of [[nearDupSink]]:
@@ -213,12 +217,7 @@ object EventStream {
       val pairs = graft.ops.EmbedIndex.appendAndFindDups(
         batch.sparkSession, batch, indexPath, vec, id,
         threshold = threshold, batchTag = Some(tag))
-      if (!pairs.isEmpty)
-        pairs.withColumn("batch_tag", lit(tag))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_tag").parquet(pairsPath)
-      ()
+      publishTagged(pairs, pairsPath, tag)
     }
 
   /** Streaming quantile maintenance over the mergeable bit-prefix
@@ -245,13 +244,7 @@ object EventStream {
       val tag = s"$appId-$batchId"
       val partial = graft.ops.Quantiles.bucketCounts(
         batch, value, prefixBits, quant)
-      // an all-filtered batch writes nothing — never a schema-less dir
-      if (!partial.isEmpty)
-        partial.withColumn("batch_tag", lit(tag))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_tag").parquet(sketchPath)
-      ()
+      publishTagged(partial, sketchPath, tag)
     }
 
   /** Streaming ANN ingest over a persisted [[graft.ops.PqDiskIndex]]:
@@ -292,13 +285,7 @@ object EventStream {
       val kept = graft.ops.DigestIndex.appendAndDedup(
         batch.sparkSession, batch, indexPath, text, id,
         batchTag = Some(tag))
-      // an empty keep set writes nothing — never a schema-less dir
-      if (!kept.isEmpty)
-        kept.withColumn("batch_tag", lit(tag))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_tag").parquet(keptPath)
-      ()
+      publishTagged(kept, keptPath, tag)
     }
 
   /** The FULL training-data curation funnel as one streaming sink —
@@ -504,13 +491,7 @@ object EventStream {
       val kept = clean
         .filter(graft.functions.PortableHash
           .hashMod(col(id), 100) < samplePct)
-      // an empty keep set writes nothing — never a schema-less dir
-      if (!kept.isEmpty)
-        kept.withColumn("batch_tag", lit(tag))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_tag").parquet(keptPath)
-      ()
+      publishTagged(kept, keptPath, tag)
     }
 
   /** Streaming CALIBRATION monitoring for a deployed classifier
@@ -638,12 +619,7 @@ object EventStream {
         // an all-null/empty batch has nothing to merge — never land a
         // zero-count partial (and never a schema-less dir)
         .filter(col("n") > 0)
-      if (!partial.isEmpty)
-        partial.withColumn("batch_tag", lit(tag))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_tag").parquet(sketchPath)
-      ()
+      publishTagged(partial, sketchPath, tag)
     }
 
   case class Impression(i_id: Long, i_ts: Timestamp, i_user: Long)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.meta.AuditLog
+import graft.ops.DigestIndex
 import graft.pipeline.{IncrementalAgg, Runner}
 import graft.state.Checkpoint
 
@@ -83,6 +84,44 @@ class CrashSweepSpec extends SparkSpec {
         .as[(String, String, Long, Double, Double, Double, Long)]
         .collect().sortBy(g => (g._1, g._2)).toSeq
       assert(got == want)
+    }
+    info(s"$n mutating calls swept")
+  }
+
+  test("a tagged DigestIndex append crashed at any file-system step re-runs to the clean result") {
+    import org.apache.hadoop.fs.Path
+    val dir = tmpDir()
+    val fixture = s"$dir/fixture"
+    def docs(rows: Seq[(Long, String)]) = rows.toDF("id", "text")
+    val history = Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha"))
+    DigestIndex.appendAndDedup(spark, docs(history), s"$fixture/idx", "text", "id",
+      batchTag = Some("h"))
+    // a copy of a history doc and a new doc twice, all in beta's db
+    // bucket: the batch's tag lands as a new leaf under a live db
+    val batch = Seq((10L, "beta"), (11L, "doc114"), (12L, "doc114"))
+    val wantFirsts = Seq(11L)
+    // (representative id, copies) per distinct text
+    val wantGroups = (history ++ batch).groupBy(_._2).values
+      .map(g => (g.map(_._1).min, g.size.toLong)).toSeq.sorted
+    val firsts = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
+    val n = CrashingFs.sweep(spark, fixture, s"$dir/runs") { root =>
+      firsts(root) = DigestIndex.appendAndDedup(spark, docs(batch), s"$root/idx",
+        "text", "id", batchTag = Some("b")).select("id").as[Long].collect().toSeq.sorted
+    } { root =>
+      assert(firsts(root) == wantFirsts)
+      val groups = DigestIndex.currentGroups(spark, s"$root/idx")
+        .as[(Long, Long)].collect().toSeq.sorted
+      assert(groups == wantGroups)
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def names(p: Path): Seq[String] = fs.listStatus(p).toSeq.flatMap { st =>
+        st.getPath.getName +: (if (st.isDirectory) names(st.getPath) else Nil)
+      }
+      val all = names(new Path(s"$root/idx/digests"))
+      assert(all.count(_.startsWith("db=")) == 2, "the batch left the live db buckets")
+      val left = all.filter(n =>
+        n == ".publish_tmp" || n.endsWith(".swap_old") || n.endsWith(".swap_commit") ||
+          n.startsWith(".spark-staging-"))
+      assert(left.isEmpty, s"residue left in the store: ${left.mkString(", ")}")
     }
     info(s"$n mutating calls swept")
   }

@@ -350,6 +350,94 @@ class LayoutSpec extends SparkSpec {
     assert(!fs.exists(new Path(s"$dir/.publish_tmp")))
   }
 
+  /** (id, db, batch_tag) rows of a `db=/batch_tag=` table. */
+  private def tagRows(dir: String): Seq[(Long, Int, String)] =
+    spark.read.parquet(dir).select("id", "db", "batch_tag")
+      .as[(Long, Int, String)].collect().toSeq.sorted
+
+  /** `n` rows from `from` under one `tag`, spread over the `dbs`
+    * buckets, in `files` files per leaf. */
+  private def writeTags(dir: String, from: Long, n: Long, dbs: Seq[Int],
+                        tag: String, files: Int = 1): Unit =
+    spark.range(from, from + n).select(col("id"),
+        element_at(typedLit(dbs), (col("id") % dbs.size + 1).cast("int")).as("db"),
+        lit(tag).as("batch_tag"))
+      .repartition(files).write.partitionBy("db", "batch_tag").parquet(dir)
+
+  private def leafFiles(dir: String): Map[String, Long] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getName -> f.lastModified()).toMap
+
+  test("replacePartitions: a new tag under a live db= leaves its sibling tags' rows") {
+    val dir = Files.createTempDirectory("publishtag").toString + "/t"
+    writeTags(dir, 0, 10, Seq(1, 2), "t1")
+    val before = tagRows(dir)
+    val sibling = leafFiles(s"$dir/db=1/batch_tag=t1")
+    val n = Layout.replacePartitions(spark, dir) { stage =>
+      writeTags(stage, 100, 4, Seq(1), "t2")
+    }
+    assert(tagRows(dir) == (before ++ (100L until 104L).map(i => (i, 1, "t2"))).sorted)
+    assert(leafFiles(s"$dir/db=1/batch_tag=t1") == sibling,
+      "a sibling tag under the touched db= was rewritten")
+    assert(n == 4)
+    assert(new java.io.File(s"$dir/db=1").list().toSeq.sorted ==
+      Seq("batch_tag=t1", "batch_tag=t2"), "swap residue left under db=1")
+  }
+
+  test("replacePartitions: republishing a tag replaces only that leaf") {
+    val dir = Files.createTempDirectory("publishretag").toString + "/t"
+    writeTags(dir, 0, 10, Seq(1, 2), "t1")
+    Layout.replacePartitions(spark, dir) { stage =>
+      writeTags(stage, 10, 10, Seq(1, 2), "t2")
+    }
+    val keep = Seq("db=1/batch_tag=t1", "db=2/batch_tag=t1", "db=2/batch_tag=t2")
+      .map(l => l -> leafFiles(s"$dir/$l")).toMap
+    // the replay of t2 lands different rows, in db=1 only
+    val n = Layout.replacePartitions(spark, dir) { stage =>
+      writeTags(stage, 500, 3, Seq(1), "t2")
+    }
+    assert(n == 3)
+    assert(tagRows(dir) == ((0L until 20L).map(i => (i, if (i % 2 == 0) 1 else 2,
+      if (i < 10) "t1" else "t2")).filterNot(r => r._2 == 1 && r._3 == "t2") ++
+      (500L until 503L).map(i => (i, 1, "t2"))).sorted)
+    assert(keep.keys.map(l => l -> leafFiles(s"$dir/$l")).toMap == keep,
+      "a leaf the replay did not produce was rewritten")
+  }
+
+  test("replacePartitions: a new db= lands by one rename") {
+    import org.apache.hadoop.fs.Path
+    val dir = Files.createTempDirectory("publishdb").toString + "/t"
+    writeTags(dir, 0, 10, Seq(1, 2), "t1")
+    // a complete stage built outside the table, so the write itself
+    // makes no file-system call under the table
+    val built = Files.createTempDirectory("publishbuilt").toString + "/s"
+    writeTags(built, 100, 6, Seq(3), "t2", files = 2)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (out, calls) = CrashingFs.during(spark, dir) {
+      Layout.replacePartitions(spark, dir) { stage =>
+        require(fs.rename(new Path(built), new Path(stage)))
+      }
+    }
+    assert(out == Right(6L))
+    // the stage cleared before and after, and db=3 moved in whole
+    assert(calls == 3, s"$calls mutating calls, not 3")
+    assert(tagRows(dir) == ((0L until 10L).map(i =>
+      (i, if (i % 2 == 0) 1 else 2, "t1")) ++ (100L until 106L).map(i => (i, 3, "t2"))).sorted)
+  }
+
+  test("replacePartitions: the returned count equals the rows on disk at depth 2") {
+    val dir = Files.createTempDirectory("publishcount2").toString + "/t"
+    writeTags(dir, 0, 40, Seq(1, 2), "t1")
+    // a live db= and a new one, several files per leaf
+    val n = Layout.replacePartitions(spark, dir) { stage =>
+      writeTags(stage, 1000, 555, Seq(2, 3), "t2", files = 3)
+    }
+    assert(new java.io.File(s"$dir/db=2/batch_tag=t2").list().count(_.endsWith(".parquet")) > 1)
+    val published = spark.read.parquet(dir).filter(col("batch_tag") === "t2").count()
+    assert(n == published && n == 555)
+  }
+
   test("writeZOrdered: preserves rows across the requested file count") {
     val dir = Files.createTempDirectory("zlayout").toString + "/t"
     val grid = spark.range(64).select(col("id").as("a"))
