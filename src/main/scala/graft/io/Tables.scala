@@ -143,7 +143,9 @@ object Tables {
     *  - Spark gets the kept directories under `basePath`, so it lists
     *    only those (serially up to
     *    `spark.sql.sources.parallelPartitionDiscovery.threshold` paths;
-    *    a caller keeping more pays Spark's listing job for them).
+    *    a caller keeping more pays Spark's listing job for them, which
+    *    runs at most `shufflePartitions` tasks in a [[graft.Graft]]
+    *    session).
     * When nothing is kept the result is an empty frame of the same
     * schema. The table must hold at least one data file. */
   def openWritten(spark: SparkSession, path: String, partCol: String,
@@ -184,6 +186,20 @@ object Tables {
     !n.startsWith(".") && !n.startsWith("_")
   }
 
+  /** The one way the engine reads a parquet footer on the driver. The
+    * read options are built once from `conf`, not per footer: parquet's
+    * default options load a fresh Hadoop Configuration on every open,
+    * about 12 ms per footer on a 4-vCPU VM. */
+  private[graft] def footers(conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.hadoop.fs.FileStatus => org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+    st => {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf), opts)
+      try r.getFooter finally r.close()
+    }
+  }
+
   /** The Spark schema a Spark writer stored in a footer (the
     * `org.apache.spark.sql.parquet.row.metadata` key), from the first
     * non-empty file of `files`. */
@@ -193,11 +209,8 @@ object Tables {
     val key = "org.apache.spark.sql.parquet.row.metadata"
     val f = files.find(_.getLen > 0).getOrElse(
       sys.error(s"openWritten: no data file under $table"))
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
-        f, spark.sparkContext.hadoopConfiguration))
-    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(key)
-      finally reader.close()
+    val json = footers(spark.sparkContext.hadoopConfiguration)(f)
+      .getFileMetaData.getKeyValueMetaData.get(key)
     require(json != null, s"openWritten: ${f.getPath} carries no Spark schema")
     DataType.fromJson(json).asInstanceOf[StructType]
   }

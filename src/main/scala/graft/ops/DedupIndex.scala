@@ -104,11 +104,15 @@ object DedupIndex {
       // layout detection reads SIGS (written first, so it leads after a
       // crash between the two appends); a pre-tagging untagged index
       // keeps its layout — appending tagged rows there breaks partition
-      // discovery
-      val legacyUntagged =
-        Layout.hasCommittedFiles(fs, new Path(sigsPath(indexPath))) &&
-          !spark.read.parquet(sigsPath(indexPath)).columns
-            .contains("batch_tag")
+      // discovery. One listing, no Spark job: the untagged layout holds
+      // committed files at its root and no `batch_tag=` child
+      val sigsTop = {
+        val sp = new Path(sigsPath(indexPath))
+        if (fs.exists(sp)) fs.listStatus(sp).filter(graft.io.Tables.visible)
+        else Array.empty[org.apache.hadoop.fs.FileStatus]
+      }
+      val legacyUntagged = sigsTop.exists(_.isFile) &&
+        !sigsTop.exists(_.getPath.getName.startsWith("batch_tag="))
       require(!(legacyUntagged && batchTag.isDefined),
         s"DedupIndex at $indexPath was accreted untagged; a tagged append " +
           "would break its partition discovery — compact/migrate the " +

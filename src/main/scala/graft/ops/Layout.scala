@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import graft.io.Tables.visible
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
+import scala.jdk.CollectionConverters._
 
 /** Write-side data layout for read-side skipping. At 100 TB the fastest
   * scan is the one that never happens: parquet keeps min/max stats per
@@ -259,16 +260,10 @@ object Layout {
     fs.delete(stage, true)
     write(stage.toString)
     def entries(dir: Path) = fs.listStatus(dir).filter(visible).toSeq
-    // built once: the default read options load a fresh Hadoop
-    // Configuration, about 12 ms per footer on a 4-vCPU VM
-    val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+    val footer = graft.io.Tables.footers(conf)
     def rows(sts: Seq[FileStatus]): Long = sts.map { st =>
       if (st.isDirectory) rows(entries(st.getPath))
-      else {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf), opts)
-        try r.getRecordCount finally r.close()
-      }
+      else footer(st).getBlocks.asScala.map(_.getRowCount).sum
     }.sum
     // `dirs` are staged; `into` is their live parent, `have` its children
     def publish(dirs: Seq[FileStatus], into: Path,
@@ -393,7 +388,9 @@ object Layout {
     * caller sizes or reads anything; without this a lost dt=X would
     * stay lost. Stale ".compact_tmp" staging (crash between staged
     * write and swap) is deleted outright — it is never authoritative
-    * and a concurrent recompaction could otherwise race on it. Only a
+    * and a concurrent recompaction could otherwise race on it — and so
+    * is `.spark-staging-*`, the residue a crashed dynamic-overwrite job
+    * left in stores written by earlier builds. Only a
     * name with a `.swap_old`/`.swap_commit` entry in the one listing
     * can need [[recoverSwap]], so a clean partition costs no extra call. */
   private def partitionDirs(fs: org.apache.hadoop.fs.FileSystem,
@@ -405,6 +402,8 @@ object Layout {
     hidden.collect { case (n, "compact_tmp") => n }.foreach { n =>
       fs.delete(new Path(dir, "." + n + ".compact_tmp"), true)
     }
+    listing.map(_.getPath).filter(_.getName.startsWith(".spark-staging-"))
+      .foreach(fs.delete(_, true))
     val crashed = hidden.collect { case (n, k) if k != "compact_tmp" => n }.distinct
     crashed.foreach(n => recoverSwap(fs, new Path(dir, n)))
     val clean = listing.filter(st => st.isDirectory && visible(st))

@@ -230,4 +230,28 @@ class DedupIndexSpec extends SparkSpec {
     assert(collectPairs(
       DedupIndex.appendAndFindDups(spark, probe, idx, "text", "doc_id")).nonEmpty)
   }
+
+  test("an index accreted untagged keeps its layout: a tagged append fails fast, " +
+      "an untagged one appends flat") {
+    val idx = tmpDir() + "/idx_legacy"
+    // the pre-tagging layout: flat sigs/, bands/ partitioned by band only
+    val built = tmpDir() + "/idx_built"
+    val want = collectPairs(DedupIndex.appendAndFindDups(spark, batch1, built,
+      "text", "doc_id"))
+    spark.read.parquet(s"$built/sigs").drop("batch_tag").write.parquet(s"$idx/sigs")
+    spark.read.parquet(s"$built/bands").drop("batch_tag")
+      .write.partitionBy("band").parquet(s"$idx/bands")
+    intercept[IllegalArgumentException] {
+      DedupIndex.appendAndFindDups(spark, batch2, idx, "text", "doc_id",
+        batchTag = Some("app-1"))
+    }
+    val legacy = collectPairs(DedupIndex.appendAndFindDups(spark, batch2, idx,
+      "text", "doc_id"))
+    val tagged = collectPairs(DedupIndex.appendAndFindDups(spark, batch2, built,
+      "text", "doc_id"))
+    assert(legacy == tagged && want.nonEmpty)
+    val sigs = spark.read.parquet(s"$idx/sigs")
+    assert(!sigs.columns.contains("batch_tag"), "the untagged layout was changed")
+    assert(sigs.count() == 6L)
+  }
 }

@@ -8,11 +8,12 @@ class GraftSessionSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
 
   override def afterAll(): Unit = {
-    // Graft.session() adopts the shared test session — undo the rule so
-    // suite ordering stays irrelevant
+    // Graft.session() adopts the shared test session — undo the rule
+    // and the listing cap so suite ordering stays irrelevant
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations
         .filterNot(_ eq graft.ext.RangeJoinRule)
+    spark.conf.unset("spark.sql.sources.parallelPartitionDiscovery.parallelism")
     super.afterAll()
   }
 
@@ -29,5 +30,20 @@ class GraftSessionSpec extends SparkSpec with BeforeAndAfterAll {
     Graft.session(shufflePartitions = 4)
     assert(s.experimental.extraOptimizations
       .count(_ eq graft.ext.RangeJoinRule) == 1)
+  }
+
+  test("Graft.session lists a 40-directory table in at most shufflePartitions tasks") {
+    import org.apache.spark.sql.functions.col
+    val dir = tmpDir() + "/t"
+    spark.range(40).select(col("id"), (col("id") * 10).as("v"), col("id").as("p"))
+      .write.partitionBy("p").parquet(dir)
+    val s = Graft.session(shufflePartitions = 4)
+    val (df, jobs) = JobCounter.during(s)(s.read.parquet(dir))
+    val listing = jobs.filter(j => Option(j.description)
+      .exists(_.startsWith("Listing leaf files and directories for 40 paths")))
+    assert(listing.size == 1, s"expected one listing job, saw $jobs")
+    assert(listing.head.tasks <= 4, s"listing ran ${listing.head.tasks} tasks")
+    assert(df.select("id", "v", "p").as[(Long, Long, Long)].collect().sorted.toSeq ==
+      (0L until 40L).map(i => (i, i * 10, i)))
   }
 }

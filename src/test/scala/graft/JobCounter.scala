@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
-/** A Spark job seen by [[JobCounter]]: its description, and whether it
-  * ran inside a SQL execution (an action on a DataFrame). File
-  * listing and schema-inference jobs run outside one, while the
-  * DataFrame is being opened. */
-case class SeenJob(description: String, sqlExecution: Boolean)
+/** A Spark job seen by [[JobCounter]]: its description, whether it
+  * ran inside a SQL execution (an action on a DataFrame), and the
+  * tasks its stages planned. File listing and schema-inference jobs
+  * run outside a SQL execution, while the DataFrame is being opened. */
+case class SeenJob(description: String, sqlExecution: Boolean, tasks: Int)
 
 /** Counts the Spark jobs `body` launches. Listener events arrive
   * asynchronously but in order, so a marker job before and after
@@ -21,7 +21,8 @@ object JobCounter {
         val p = Option(e.properties)
         seen.add(SeenJob(
           p.flatMap(q => Option(q.getProperty("spark.job.description"))).orNull,
-          p.exists(_.getProperty("spark.sql.execution.id") != null)))
+          p.exists(_.getProperty("spark.sql.execution.id") != null),
+          e.stageInfos.map(_.numTasks).sum))
       }
     }
     val tag = s"job-counter-${System.nanoTime}"

@@ -438,6 +438,35 @@ class LayoutSpec extends SparkSpec {
     assert(n == published && n == 555)
   }
 
+  test("partitionDirs clears .spark-staging residue: a DigestIndex store is clean after the next append") {
+    import graft.ops.DigestIndex
+    def docs(rows: Seq[(Long, String)]) = rows.toDF("id", "text")
+    // (first arrivals, groups, residue left) of a history append, an
+    // optional planted crashed dynamic-overwrite stage, then a batch
+    def run(idx: String, plant: Boolean) = {
+      DigestIndex.appendAndDedup(spark,
+        docs(Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha"))), idx, "text", "id",
+        batchTag = Some("h"))
+      val staging = new java.io.File(s"$idx/digests/.spark-staging-x")
+      if (plant) {
+        spark.range(3).select(lit("planted").as("digest"), col("id"), lit(5L).as("n"))
+          .write.parquet(s"$staging/db=1/batch_tag=old")
+        assert(staging.exists())
+      }
+      val firsts = DigestIndex.appendAndDedup(spark,
+        docs(Seq((10L, "beta"), (11L, "gamma"), (12L, "gamma"))), idx, "text", "id",
+        batchTag = Some("b")).select("id").as[Long].collect().toSeq.sorted
+      val groups = DigestIndex.currentGroups(spark, idx)
+        .as[(Long, Long)].collect().toSeq.sorted
+      (firsts, groups, staging.exists())
+    }
+    val clean = run(Files.createTempDirectory("stagingclean").toString + "/idx", plant = false)
+    val planted = run(Files.createTempDirectory("stagingplanted").toString + "/idx", plant = true)
+    assert(!planted._3, ".spark-staging-x is still in the store after the append")
+    assert(planted == clean)
+    assert(clean._1 == Seq(11L))
+  }
+
   test("writeZOrdered: preserves rows across the requested file count") {
     val dir = Files.createTempDirectory("zlayout").toString + "/t"
     val grid = spark.range(64).select(col("id").as("a"))
