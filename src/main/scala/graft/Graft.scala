@@ -4,10 +4,14 @@ import org.apache.spark.sql.SparkSession
 
 /** The one-call entry point for a user adopting the engine: a
   * `SparkSession` builder pre-wired with everything the library
-  * assumes — the native SQL functions and the range-join optimizer
-  * rule ([[graft.ext.GraftExtensions]]), AQE with skew-join handling,
-  * and a UTC session zone (the oracle-parity contract every operator
-  * here is verified under).
+  * assumes — the native SQL functions and two optimizer rules
+  * ([[graft.ext.GraftExtensions]]): [[graft.ext.RangeJoinRule]], which
+  * turns a bare inequality join into a bucketized equi-join, and
+  * [[graft.ext.DeadSortRule]], which drops a global sort that a
+  * partitioned window re-partitions (`Windows.rsi` over
+  * `Windows.barAnalysis` plans one exchange instead of three) — plus
+  * AQE with skew-join handling and a UTC session zone (the
+  * oracle-parity contract every operator here is verified under).
   *
   * On a cluster, prefer submitting with
   * `--conf spark.sql.extensions=graft.ext.GraftExtensions` and your

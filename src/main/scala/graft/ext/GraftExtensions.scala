@@ -11,7 +11,8 @@ import graft.functions.Expressions._
   *
   *  - Cluster-wide: `spark.sql.extensions=graft.ext.GraftExtensions`
   *    (the standard `SparkSessionExtensions` injection point; every
-  *    session the cluster builds gets the functions).
+  *    session the cluster builds gets the functions and the two
+  *    optimizer rules, [[RangeJoinRule]] and [[DeadSortRule]]).
   *  - Existing session: [[GraftExtensions.register]] adds the same
   *    functions to a live session's registry (useful in tests/REPL).
   *
@@ -22,6 +23,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.descriptors.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => RangeJoinRule)
+    ext.injectOptimizerRule(_ => DeadSortRule)
   }
 }
 
@@ -92,12 +94,12 @@ object GraftExtensions {
       org.apache.spark.sql.GraftBridge.registerFunction(spark, ident, inf, builder)
     }
 
-  /** Functions + optimizer rule on a live session, idempotently — the
+  /** Functions + optimizer rules on a live session, idempotently — the
     * full equivalent of building with `spark.sql.extensions`. */
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
     register(spark)
-    if (!spark.experimental.extraOptimizations.exists(_ eq RangeJoinRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RangeJoinRule
+    val installed = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = installed ++
+      Seq(RangeJoinRule, DeadSortRule).filterNot(r => installed.exists(_ eq r))
   }
 }

@@ -15,6 +15,16 @@ import graft.functions.Rounding.roundHalfUp
   *    window column because all specs share the same partitioning +
   *    ordering — Catalyst collapses them into a single `WindowExec`
   *    (verify: one Exchange in the formatted plan, not three).
+  *  - ONE exchange per series holds for chained ops too: `barAnalysis`
+  *    ends with a presentation `orderBy`, and when a partitioned window
+  *    (`rsi`, `drawdown`) consumes its result, [[graft.ext.DeadSortRule]]
+  *    drops that sort — the window's hash exchange would discard its
+  *    order anyway. Without the rule (a session built without
+  *    `GraftExtensions`) the sort costs a sampling job and a range
+  *    exchange: three exchanges instead of one.
+  *  - Each dependency level of derived columns is ONE projection
+  *    (`select(col("*"), ...)`), not a `withColumn` per column: every
+  *    `withColumn` re-analyzes the whole plan.
   *  - Frames are ROWS-bounded (4 PRECEDING..CURRENT ROW): constant-memory
   *    streaming frame evaluation per partition; no unbounded state.
   *  - At 100 TB the only skew risk is a hot series key; the key space is
@@ -94,24 +104,23 @@ object Windows {
     val w = series(col(part), col(order), col(tie))
     val wn = w.rowsBetween(-(n - 1), Window.currentRow)
     val v = col(value)
-    df.withColumn("_prev", lag(v, 1).over(w))
+    val prev = df.select(col("*"), lag(v, 1).over(w).as("_prev"))
+    val moves = prev.select(col("*"),
       // a NULL current value propagates NULL (the frame AVG skips it) —
       // without the explicit branch `v > _prev` is NULL and the
       // otherwise(0.0) would count the missing observation as a
       // zero-change day, deflating both trailing averages toward 50
-      .withColumn("_gain",
-        when(v.isNull || col("_prev").isNull, lit(null).cast("double"))
-          .when(v > col("_prev"), v - col("_prev")).otherwise(lit(0.0)))
-      .withColumn("_loss",
-        when(v.isNull || col("_prev").isNull, lit(null).cast("double"))
-          .when(v < col("_prev"), col("_prev") - v).otherwise(lit(0.0)))
-      .withColumn("_avg_gain", avg(col("_gain")).over(wn))
-      .withColumn("_avg_loss", avg(col("_loss")).over(wn))
-      .withColumn("rsi", roundHalfUp(
-        when(col("_avg_loss") === 0.0, lit(100.0))
-          .otherwise(lit(100.0) - lit(100.0) /
-            (lit(1.0) + col("_avg_gain") / col("_avg_loss"))), 4))
-      .drop("_prev", "_gain", "_loss", "_avg_gain", "_avg_loss")
+      when(v.isNull || col("_prev").isNull, lit(null).cast("double"))
+        .when(v > col("_prev"), v - col("_prev")).otherwise(lit(0.0)).as("_gain"),
+      when(v.isNull || col("_prev").isNull, lit(null).cast("double"))
+        .when(v < col("_prev"), col("_prev") - v).otherwise(lit(0.0)).as("_loss"))
+    val avgs = moves.select(col("*"),
+      avg(col("_gain")).over(wn).as("_avg_gain"),
+      avg(col("_loss")).over(wn).as("_avg_loss"))
+    avgs.select(df.col("*"), roundHalfUp(
+      when(col("_avg_loss") === 0.0, lit(100.0))
+        .otherwise(lit(100.0) - lit(100.0) /
+          (lit(1.0) + col("_avg_gain") / col("_avg_loss"))), 4).as("rsi"))
   }
 
   /** Running-peak drawdown: unbounded-preceding MAX frame (exact — no
@@ -134,6 +143,12 @@ object Windows {
   /** Full analysis pipeline = the reference's stock_bars_analysis CTAS body
     * transplanted onto a generic (part, order, tie, value) series.
     * Output schema mirrors stock_bars_analysis.sql:25-33.
+    *
+    * The result is ordered by (part, order, tie) for when it is the
+    * final output. When a partitioned window consumes it instead (as
+    * `rsi` and `drawdown` do), [[graft.ext.DeadSortRule]] drops that
+    * sort in the optimizer: the window's own exchange would throw its
+    * order away, so the chained query plans one exchange, not three.
     */
   def barAnalysis(df: DataFrame, part: String, order: String, tie: String,
                   value: String): DataFrame = {
@@ -141,19 +156,19 @@ object Windows {
       "daily_return", "daily_return_pct", "moving_avg_5", "stddev_5"))
     val w = series(col(part), col(order), col(tie))
     val w5 = trailing5(col(part), col(order), col(tie))
-    df
-      .withColumn("dt", to_date(col(order)))
-      .withColumn("prev_value", lag(col(value), 1).over(w))
-      .withColumn("daily_return", dailyReturn(col(value), col("prev_value")))
+    val prev = df.select(col("*"), to_date(col(order)).as("dt"),
+      lag(col(value), 1).over(w).as("prev_value"),
+      roundHalfUp(avg(col(value)).over(w5), 2).as("moving_avg_5"))
+    val ret = prev.select(col("*"),
+      dailyReturn(col(value), col("prev_value")).as("daily_return"))
+    ret.select(col("*"),
       // pct derives from the already-rounded return — the reference
       // double-rounds (sql:21 then :31); preserved for hash parity.
-      .withColumn("daily_return_pct", roundHalfUp(col("daily_return") * 100, 1))
-      .withColumn("moving_avg_5", roundHalfUp(avg(col(value)).over(w5), 2))
-      .withColumn("stddev_5", roundHalfUp(stddev_samp(col("daily_return")).over(w5), 2))
+      roundHalfUp(col("daily_return") * 100, 1).as("daily_return_pct"),
+      roundHalfUp(stddev_samp(col("daily_return")).over(w5), 2).as("stddev_5"))
+      .orderBy(col(part), col(order), col(tie))
       .select(col(part), col(tie), col("dt"), col(value), col("prev_value"),
         col("daily_return"), col("daily_return_pct"), col("moving_avg_5"),
-        col("stddev_5"), col(order))
-      .orderBy(col(part), col(order), col(tie))
-      .drop(order)
+        col("stddev_5"))
   }
 }

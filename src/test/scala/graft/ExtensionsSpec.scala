@@ -2,12 +2,24 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ext.GraftExtensions
+import org.scalatest.BeforeAndAfterAll
 
 /** SQL registration of the native expressions: after registration the
   * functions are callable from spark.sql and agree bit-for-bit with the
   * Column API (same Expression underneath — codegen'd, no UDF). */
-class ExtensionsSpec extends SparkSpec {
+class ExtensionsSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
+
+  // registerAll installs the optimizer rules on the shared test
+  // session — take them out again so suite ordering stays irrelevant
+  private lazy val before = spark.experimental.extraOptimizations
+
+  override def beforeAll(): Unit = { super.beforeAll(); before }
+
+  override def afterAll(): Unit = {
+    spark.experimental.extraOptimizations = before
+    super.afterAll()
+  }
 
   test("registered SQL functions match the Column API bit-for-bit") {
     GraftExtensions.register(spark)
@@ -67,6 +79,8 @@ class ExtensionsSpec extends SparkSpec {
     GraftExtensions.registerAll(spark)
     assert(spark.experimental.extraOptimizations
       .count(_ eq graft.ext.RangeJoinRule) == 1)
+    assert(spark.experimental.extraOptimizations
+      .count(_ eq graft.ext.DeadSortRule) == 1)
   }
 
   test("SQL-surface dedup: minhash signatures from SQL agree with DedupOps") {

@@ -8,11 +8,11 @@ class GraftSessionSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
 
   override def afterAll(): Unit = {
-    // Graft.session() adopts the shared test session — undo the rule
+    // Graft.session() adopts the shared test session — undo the rules
     // and the listing cap so suite ordering stays irrelevant
     spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations
-        .filterNot(_ eq graft.ext.RangeJoinRule)
+      spark.experimental.extraOptimizations.filterNot(r =>
+        (r eq graft.ext.RangeJoinRule) || (r eq graft.ext.DeadSortRule))
     spark.conf.unset("spark.sql.sources.parallelPartitionDiscovery.parallelism")
     super.afterAll()
   }
