@@ -2032,7 +2032,7 @@ object ExtQueries {
     val bench = all.filter(col("doc_id") % 50 === 0)
     val q = TextOps.qualityScore(corpus, "text")
       .filter(col("quality") >= 0.3)
-    val fx = graft.Fixtures.ensure("curate_didx",
+    val fx = graft.Fixtures.ensure("curate_didx_v2",
       dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
         graft.Fixtures.contentKey(s"curate_didx|$dir", all, "doc_id", "text")) { p =>
       graft.ops.DigestIndex.appendAndDedup(s,
@@ -2493,7 +2493,7 @@ object ExtQueries {
       val all = docs(s, dir).select("doc_id", "text")
       val hist = all.filter(col("doc_id") % 2 === 0)
       val daily = all.filter(col("doc_id") % 2 =!= 0)
-      val fx = graft.Fixtures.ensure("digest_idx",
+      val fx = graft.Fixtures.ensure("digest_idx_v2",
         dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
           graft.Fixtures.contentKey(s"digest_idx|$dir", all, "doc_id", "text")) { p =>
         graft.ops.DigestIndex.appendAndDedup(s, hist, p + "/idx",
@@ -2793,7 +2793,7 @@ object ExtQueries {
         .select("doc_id", "text")
       val daily = withPrefixMutants(d.filter(lit(false)),
         d.filter(col("doc_id") % 20 === 0))
-      val fx = graft.Fixtures.ensure("dedup_idx",
+      val fx = graft.Fixtures.ensure("dedup_idx_v2",
         dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
           graft.Fixtures.contentKey(s"dedup_idx|$dir", d, "doc_id", "text")) { p =>
         graft.ops.DedupIndex.appendAndFindDups(s, d, p + "/idx",

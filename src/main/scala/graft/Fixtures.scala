@@ -49,7 +49,11 @@ object Fixtures {
     * another is mid-build in; the in-JVM `synchronized` covers parallel
     * suites in one process, where a second `FileChannel.lock` would
     * throw OverlappingFileLockException instead of waiting. Returns the
-    * fixture root; builders write UNDER it (e.g. `root + "/idx"`). */
+    * fixture root; builders write UNDER it (e.g. `root + "/idx"`).
+    * The key covers the input, not the code that builds the state, and
+    * fixtures outlive the build: a builder whose on-disk layout changes
+    * takes a new `name` (the index fixtures' `_v2`), so state an earlier
+    * build left in the tmpdir is never reused. */
   def ensure(name: String, key: String)(build: String => Unit): String = {
     val path = System.getProperty("java.io.tmpdir") + "/graft_fx_" + name +
       "_" + key.replaceAll("[^A-Za-z0-9]", "_")

@@ -3,23 +3,38 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import graft.functions.Rounding.roundHalfUp
 import graft.functions.Expressions.{band_keys, minhash_sig}
+import graft.io.Tables
+import graft.meta.JobLabel
 
 /** Incremental near-duplicate detection against a PERSISTED MinHash
   * index — the operator that makes corpus dedup O(batch) instead of
   * O(corpus): a daily crawl batch is checked against the full history
   * without re-reading or re-hashing a single historical document.
   *
-  * Index layout (two tables under `indexPath`):
-  *  - `bands/` (partitioned by `band`): (bkey, id) — 12-byte rows, the
-  *    LSH candidate structure;
-  *  - `sigs/`: (id, sig) — each doc's k-minhash signature stored ONCE.
+  * Index layout (two tables under `indexPath`, each partitioned by
+  * `batch_tag` only — a batch lands ONE leaf per table, its files
+  * sized by Spark to the data, so a small batch writes one file each):
+  *  - `bands/batch_tag=<tag>/`: (band, bkey, id) — 12-byte rows, the
+  *    LSH candidate structure; `band` is a column, not a directory;
+  *  - `sigs/batch_tag=<tag>/`: (id, sig) — each doc's k-minhash
+  *    signature stored ONCE.
   * Storing the signature per BAND row instead (the naive layout) would
   * multiply the index by the band count — 16× more bytes written per
-  * batch and scanned per probe at 100 TB.
+  * batch and scanned per probe at 100 TB. Earlier builds also split
+  * `bands/` into one `band=` directory per band; the probe never
+  * pruned by band (it scans every band and semi-joins the batch's
+  * keys), so those 16 directories only cost files, listings and
+  * publishes. A tagged append fails on a store in that layout;
+  * [[compact]] migrates it once.
   *
   * Scale story (100 TB corpus, daily batches):
+  *  - Both tables open through [[Tables.openWritten]] — one root
+  *    listing, one footer read, no Spark job while a table keeps ≤ 32
+  *    tags ([[foldBatches]] bounds that) — the stored bands without
+  *    the batch's own tag, the stored sigs whole.
   *  - The batch's band keys (|batch| × bands rows of 12 bytes) are
   *    BROADCAST against the bands scan, so only index rows whose
   *    (band, bkey) bucket is touched by the batch survive map-side —
@@ -35,8 +50,8 @@ import graft.functions.Expressions.{band_keys, minhash_sig}
   *    Each call therefore emits exactly the NEW pairs, and the union
   *    of all calls equals the full-batch [[DedupOps.minhashDupPairs]]
   *    over the accumulated corpus (asserted in DedupIndexSpec).
-  *  - Appends accrete small files per partition — run
-  *    [[Layout.compactPartitions]] as steady-state maintenance.
+  *  - Appends accrete one leaf per table per batch — run
+  *    [[foldBatches]] and [[compact]] as steady-state maintenance.
   *
   * Contract: doc ids are globally unique across batches. Replay
   * safety: every batch lands in tag-scoped partitions via
@@ -61,7 +76,7 @@ object DedupIndex {
     * itself, then append the batch's bands and signatures to the index.
     * Returns (id_a, id_b, est_jaccard), materialized BEFORE the append
     * so the lazy plan can never read the batch's own freshly-written
-    * rows. */
+    * rows. Every Spark job it launches is labelled `graft:index.dedup`. */
   def appendAndFindDups(spark: SparkSession, batch: DataFrame,
                         indexPath: String, text: String, id: String,
                         shingleWidth: Int = 3, k: Int = 64, bands: Int = 16,
@@ -73,6 +88,16 @@ object DedupIndex {
         "partition: an append under it would OVERWRITE the " +
         "folded history and the probe's replay self-exclusion would " +
         "hide what remains")
+    JobLabel.during(spark, "graft:index.dedup")(findAndAppend(spark, batch,
+      indexPath, text, id, shingleWidth, k, bands, threshold, maxBucket,
+      batchTag))
+  }
+
+  private def findAndAppend(spark: SparkSession, batch: DataFrame,
+                            indexPath: String, text: String, id: String,
+                            shingleWidth: Int, k: Int, bands: Int,
+                            threshold: Double, maxBucket: Int,
+                            batchTag: Option[String]): DataFrame = {
     val sigsNew = batch
       .select(col(id), minhash_sig(split(col(text), " "), shingleWidth, k).as("sig"))
       .filter(size(col("sig")) > 0)
@@ -106,17 +131,20 @@ object DedupIndex {
       // keeps its layout — appending tagged rows there breaks partition
       // discovery. One listing, no Spark job: the untagged layout holds
       // committed files at its root and no `batch_tag=` child
-      val sigsTop = {
-        val sp = new Path(sigsPath(indexPath))
-        if (fs.exists(sp)) fs.listStatus(sp).filter(graft.io.Tables.visible)
-        else Array.empty[org.apache.hadoop.fs.FileStatus]
-      }
+      val sigsTop = visibleChildren(fs, new Path(sigsPath(indexPath)))
       val legacyUntagged = sigsTop.exists(_.isFile) &&
         !sigsTop.exists(_.getPath.getName.startsWith("batch_tag="))
       require(!(legacyUntagged && batchTag.isDefined),
         s"DedupIndex at $indexPath was accreted untagged; a tagged append " +
           "would break its partition discovery — compact/migrate the " +
           "index or keep appending untagged (batchTag = None)")
+      // the tag-only open would read a `band=` tree as empty, and every
+      // pair against history would be lost
+      require(legacyUntagged ||
+        !bucketedBands(fs, new Path(bandsPath(indexPath))),
+        s"DedupIndex at $indexPath holds the bucketed band=/batch_tag= " +
+          "bands layout of earlier builds; run DedupIndex.compact on it " +
+          "once to migrate")
       val tag = if (legacyUntagged) None
         else Some(batchTag.getOrElse(
           Layout.contentTag(sigsNew, Seq(id, "sig"))))
@@ -126,16 +154,14 @@ object DedupIndex {
           // map-side pruning of the historical index: broadcast the
           // batch's touched bucket keys, keep only matching index rows
           val newKeys = newBands.select("band", "bkey").distinct()
-          val stored = spark.read.parquet(bandsPath(indexPath))
           // a tagged REPLAY sees its own first attempt in the index; it
           // must be excluded or every batch doc counts twice in its
           // buckets — sizes near maxBucket then cross the cap and get
           // dropped, so the replayed pair set would silently differ
           // from the first run's (breaking the replay contract)
           val storedOthers = tag match {
-            case Some(t) if stored.columns.contains("batch_tag") =>
-              stored.filter(col("batch_tag") =!= t)
-            case _ => stored
+            case Some(t) => openTagged(spark, bandsPath(indexPath))(_ != t)
+            case None => spark.read.parquet(bandsPath(indexPath))
           }
           val oldHits = storedOthers
             .join(broadcast(newKeys), Seq("band", "bkey"), "left_semi")
@@ -178,9 +204,12 @@ object DedupIndex {
         .unionByName(cand.select(col("id_b").as(id))).distinct()
       val sigsExist =
         Layout.hasCommittedFiles(fs, new Path(sigsPath(indexPath)))
+      def storedSigs =
+        if (tag.isDefined) openTagged(spark, sigsPath(indexPath))(_ => true)
+        else spark.read.parquet(sigsPath(indexPath))
       val sigSrc = (if (!sigsExist) sigsNew.select(col(id), col("sig"))
         else sigsNew.select(col(id), col("sig")).unionByName(
-          spark.read.parquet(sigsPath(indexPath))
+          storedSigs
             .join(broadcast(candIds), Seq(id), "left_semi")
             .select(col(id), col("sig"))))
         .dropDuplicates(id)
@@ -202,24 +231,22 @@ object DedupIndex {
       // Bands-first would leave ids discoverable as candidates with NO
       // signature, and the inner sig join would silently drop every
       // future pair involving them.
-      // bands get one exchange on `band` before the partitioned write:
-      // without it every task writes a file into every band dir
-      // (tasks×bands files per batch — per-file open cost then
-      // dominates later probes' band scans at corpus scale); with it
-      // each band dir gets exactly one file per batch. sigs is flat —
-      // its per-batch file count is just the task count and compact()
-      // owns its sizing.
+      // each tagged table is rebalanced before its write, the exchange
+      // AQE sizes for writes: a small batch lands as one file per leaf, a
+      // large one in files of the advisory partition size, where the task
+      // count alone would set the file count.
       tag match {
         case Some(t) =>
           val sigRows =
             sigsNew.select(lit(t).as("batch_tag"), col(id), col("sig"))
+              .hint("rebalance", col(id))
           Layout.replacePartitions(spark, sigsPath(indexPath))(
             sigRows.write.partitionBy("batch_tag").parquet(_))
-          val bandRows = newBands.select(col("band"), lit(t).as("batch_tag"),
+          val bandRows = newBands.select(lit(t).as("batch_tag"), col("band"),
               col("bkey"), col(id))
-            .repartition(bands, col("band"))
+            .hint("rebalance", col("band"), col("bkey"))
           Layout.replacePartitions(spark, bandsPath(indexPath))(
-            bandRows.write.partitionBy("band", "batch_tag").parquet(_))
+            bandRows.write.partitionBy("batch_tag").parquet(_))
         case None =>
           sigsNew.select(col(id), col("sig"))
             .write.mode(SaveMode.Append).parquet(sigsPath(indexPath))
@@ -250,8 +277,11 @@ object DedupIndex {
         targetFileBytes = targetFileBytes)).sum
 
   /** Steady-state file maintenance: compact the small files appends
-    * accrete under `bands/` and `sigs/`. Layout-preserving — every
-    * band / batch_tag partition is rewritten in place through
+    * accrete under `bands/` and `sigs/`. First migrates a `bands/` in
+    * the bucketed `band=/batch_tag=` layout of earlier builds to the
+    * tag-only layout, tags kept, through one [[Layout.replace]].
+    * Otherwise layout-preserving — every
+    * batch_tag partition is rewritten in place through
     * [[Layout.compactPartitions]]' stage-and-swap (flat untagged
     * `sigs/` counts as its own single leaf), so probe pruning and the
     * tagged replay contract are untouched, and a crash leaves each
@@ -269,9 +299,32 @@ object DedupIndex {
       // before probing, or the committed-files check reads "no table"
       // and silently skips the directory that most needs recovery
       Layout.recoverSwap(fs, tp)
-      if (Layout.hasCommittedFiles(fs, tp))
+      val migrated = if (!bucketedBands(fs, tp)) 0 else {
+        Layout.replace(spark, t)(
+          spark.read.parquet(t).write.partitionBy("batch_tag").parquet(_))
+        1
+      }
+      migrated + (if (Layout.hasCommittedFiles(fs, tp))
         Layout.compactPartitions(spark, t, targetFileBytes)
-      else 0
+      else 0)
     }.sum
   }
+
+  private def visibleChildren(fs: org.apache.hadoop.fs.FileSystem, p: Path) =
+    if (fs.exists(p)) fs.listStatus(p).filter(Tables.visible)
+    else Array.empty[org.apache.hadoop.fs.FileStatus]
+
+  /** `bands/` in the layout of earlier tagged builds: `band=` directories
+    * holding `batch_tag=` children. */
+  private def bucketedBands(fs: org.apache.hadoop.fs.FileSystem, p: Path) =
+    visibleChildren(fs, p).find(st => st.isDirectory &&
+        st.getPath.getName.startsWith("band=")).exists(d =>
+      visibleChildren(fs, d.getPath)
+        .exists(_.getPath.getName.startsWith("batch_tag=")))
+
+  /** A tagged table's leaves whose tag passes `keep`, opened without a
+    * Spark job. */
+  private def openTagged(spark: SparkSession, path: String)(
+      keep: String => Boolean): DataFrame =
+    Tables.openWritten(spark, path, "batch_tag", StringType)(keep)
 }

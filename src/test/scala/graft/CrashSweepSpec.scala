@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.meta.AuditLog
-import graft.ops.DigestIndex
+import graft.ops.{DedupIndex, DigestIndex}
 import graft.pipeline.{IncrementalAgg, Runner}
 import graft.state.Checkpoint
 
@@ -89,15 +89,14 @@ class CrashSweepSpec extends SparkSpec {
   }
 
   test("a tagged DigestIndex append crashed at any file-system step re-runs to the clean result") {
-    import org.apache.hadoop.fs.Path
     val dir = tmpDir()
     val fixture = s"$dir/fixture"
     def docs(rows: Seq[(Long, String)]) = rows.toDF("id", "text")
     val history = Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha"))
     DigestIndex.appendAndDedup(spark, docs(history), s"$fixture/idx", "text", "id",
       batchTag = Some("h"))
-    // a copy of a history doc and a new doc twice, all in beta's db
-    // bucket: the batch's tag lands as a new leaf under a live db
+    // a copy of a history doc and a new doc twice: the batch's tag
+    // lands as a new leaf beside the history's
     val batch = Seq((10L, "beta"), (11L, "doc114"), (12L, "doc114"))
     val wantFirsts = Seq(11L)
     // (representative id, copies) per distinct text
@@ -112,17 +111,62 @@ class CrashSweepSpec extends SparkSpec {
       val groups = DigestIndex.currentGroups(spark, s"$root/idx")
         .as[(Long, Long)].collect().toSeq.sorted
       assert(groups == wantGroups)
-      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def names(p: Path): Seq[String] = fs.listStatus(p).toSeq.flatMap { st =>
-        st.getPath.getName +: (if (st.isDirectory) names(st.getPath) else Nil)
-      }
-      val all = names(new Path(s"$root/idx/digests"))
-      assert(all.count(_.startsWith("db=")) == 2, "the batch left the live db buckets")
-      val left = all.filter(n =>
-        n == ".publish_tmp" || n.endsWith(".swap_old") || n.endsWith(".swap_commit") ||
-          n.startsWith(".spark-staging-"))
-      assert(left.isEmpty, s"residue left in the store: ${left.mkString(", ")}")
+      assert(files(s"$root/idx/digests/batch_tag=h") ==
+        files(s"$fixture/idx/digests/batch_tag=h"), "the history leaf changed")
+      assert(visible(s"$root/idx/digests") == Set("batch_tag=h", "batch_tag=b"),
+        "the batch did not land as exactly one leaf")
+      assertNoResidue(s"$root/idx/digests")
     }
     info(s"$n mutating calls swept")
+  }
+
+  test("a tagged DedupIndex append crashed at any file-system step re-runs to the clean result") {
+    val dir = tmpDir()
+    val fixture = s"$dir/fixture"
+    def docs(rows: Seq[(Long, String)]) = rows.toDF("id", "text")
+    val base = "the quick brown fox jumps over the lazy dog " * 4
+    val history = Seq((1L, base), (2L, "spark engines shuffle bytes " * 6))
+    DedupIndex.appendAndFindDups(spark, docs(history), s"$fixture/idx", "text", "id",
+      batchTag = Some("h"))
+    // a near copy of doc 1 and an unrelated doc
+    val batch = Seq((10L, base + "tail"), (11L, "nothing in common here at all " * 5))
+    val pairs = scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Long)]]
+    val n = CrashingFs.sweep(spark, fixture, s"$dir/runs") { root =>
+      pairs(root) = DedupIndex.appendAndFindDups(spark, docs(batch), s"$root/idx",
+        "text", "id", batchTag = Some("b")).select("id_a", "id_b")
+        .as[(Long, Long)].collect().toSeq.sorted
+    } { root =>
+      assert(pairs(root) == Seq((1L, 10L)))
+      def ids(t: String) = spark.read.parquet(s"$root/idx/$t")
+        .filter($"batch_tag" === "b").select("id").as[Long].collect().toSeq
+      assert(ids("sigs").sorted == Seq(10L, 11L))
+      assert(ids("bands").groupBy(identity).map { case (i, r) => i -> r.size } ==
+        Map(10L -> 16, 11L -> 16))
+      for (t <- Seq("sigs", "bands")) {
+        assert(files(s"$root/idx/$t/batch_tag=h") ==
+          files(s"$fixture/idx/$t/batch_tag=h"), s"the history leaf of $t changed")
+        assertNoResidue(s"$root/idx/$t")
+      }
+    }
+    info(s"$n mutating calls swept")
+  }
+
+  /** The visible entries of a directory. */
+  private def visible(dir: String): Set[String] =
+    new java.io.File(dir).list().filterNot(n => n.startsWith(".") || n.startsWith("_")).toSet
+
+  /** The data files of a leaf, by name and length. */
+  private def files(dir: String): Set[(String, Long)] =
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+      .map(f => (f.getName, f.length)).toSet
+
+  private def assertNoResidue(dir: String): Unit = {
+    def names(f: java.io.File): Seq[String] = f.listFiles().toSeq.flatMap { c =>
+      c.getName +: (if (c.isDirectory) names(c) else Nil)
+    }
+    val left = names(new java.io.File(dir)).filter(n =>
+      n == ".publish_tmp" || n.endsWith(".swap_old") || n.endsWith(".swap_commit") ||
+        n.startsWith(".spark-staging-"))
+    assert(left.isEmpty, s"residue left in $dir: ${left.mkString(", ")}")
   }
 }

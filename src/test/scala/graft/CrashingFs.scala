@@ -1,7 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.SparkSession
@@ -14,7 +14,8 @@ class InjectedCrash(msg: String) extends java.io.IOException(msg)
   * rename, delete, mkdirs) on paths under [[CrashingFs]]'s root are
   * numbered from 1; from the armed call number on, each one throws
   * [[InjectedCrash]] without touching the disk, as a crashed process
-  * makes no further change. Reads always pass. Installed through
+  * makes no further change. Reads always pass; the files opened under
+  * the root are recorded ([[CrashingFs.opened]]). Installed through
   * `fs.file.impl`, the same hook perfbench's `CountingLocalFileSystem`
   * uses. */
 class CrashingLocalFileSystem extends LocalFileSystem {
@@ -27,6 +28,7 @@ class CrashingLocalFileSystem extends LocalFileSystem {
   override def rename(src: Path, dst: Path): Boolean = { step("rename", src); super.rename(src, dst) }
   override def delete(f: Path, recursive: Boolean): Boolean = { step("delete", f); super.delete(f, recursive) }
   override def mkdirs(f: Path, permission: FsPermission): Boolean = { step("mkdirs", f); super.mkdirs(f, permission) }
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = { CrashingFs.read(f); super.open(f, bufferSize) }
 }
 
 /** Crash an operation at each of its file-system steps.
@@ -41,15 +43,24 @@ object CrashingFs {
   private val calls = new AtomicLong()
   @volatile private var root: String = null
   @volatile private var crashAt = Long.MaxValue
+  private val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
-  private[graft] def step(op: String, f: Path): Unit = {
+  private def inRoot(f: Path): Option[String] = {
     val r = root
     val q = f.toUri.getPath
-    if (r != null && (q == r || q.startsWith(r + "/"))) {
-      val n = calls.incrementAndGet()
-      if (n >= crashAt) throw new InjectedCrash(s"injected crash at call $n ($op $f)")
-    }
+    if (r != null && (q == r || q.startsWith(r + "/"))) Some(q) else None
   }
+
+  private[graft] def step(op: String, f: Path): Unit = inRoot(f).foreach { _ =>
+    val n = calls.incrementAndGet()
+    if (n >= crashAt) throw new InjectedCrash(s"injected crash at call $n ($op $f)")
+  }
+
+  private[graft] def read(f: Path): Unit = inRoot(f).foreach(reads.add)
+
+  /** The paths opened for reading under the root during the last
+    * [[during]] call, tasks' opens included. */
+  def opened: Seq[String] = reads.toArray(Array.empty[String]).toSeq
 
   /** Runs `body` with the crash switch on for paths under `under`,
     * crashing at mutating call `k` (never when `k` is `Long.MaxValue`).
@@ -63,7 +74,8 @@ object CrashingFs {
     val saved = keys.map(key => key -> Option(conf.get(key)))
     conf.set("fs.file.impl", classOf[CrashingLocalFileSystem].getName)
     conf.set("fs.file.impl.disable.cache", "true")
-    calls.set(0); crashAt = k; root = new java.io.File(under).getCanonicalPath
+    calls.set(0); reads.clear(); crashAt = k
+    root = new java.io.File(under).getCanonicalPath
     try {
       val out = try Right(body) catch { case e: Exception => Left(e) }
       val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000

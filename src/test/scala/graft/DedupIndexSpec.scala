@@ -115,10 +115,14 @@ class DedupIndexSpec extends SparkSpec {
   test("index persists the split layout: thin bands by band, signatures once") {
     val idx = tmpDir() + "/idx"
     DedupIndex.appendAndFindDups(spark, batch1, idx, "text", "doc_id")
-    val bandDirs = new java.io.File(s"$idx/bands").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("band="))
-    assert(bandDirs.length == 16, s"expected 16 band partitions, got ${bandDirs.length}")
+    // one batch_tag leaf per table per batch; band is a column
+    def leaves(t: String) = new java.io.File(s"$idx/$t").listFiles()
+      .filter(f => f.isDirectory && !f.getName.startsWith(".")).map(_.getName).toSeq
+    assert(leaves("bands").length == 1 && leaves("bands").forall(_.startsWith("batch_tag=")),
+      s"expected one batch_tag leaf, got ${leaves("bands")}")
+    assert(leaves("sigs") == leaves("bands"))
     val bandsT = spark.read.parquet(s"$idx/bands")
+    assert(bandsT.select("band").distinct().count() == 16)
     // batch_tag: the default content-derived idempotency partition
     assert(bandsT.columns.toSet == Set("band", "bkey", "doc_id", "batch_tag"))
     // one thin row per (doc, band) for every doc with a non-empty signature
@@ -129,6 +133,7 @@ class DedupIndexSpec extends SparkSpec {
     assert(sigsT.count() == 3L)
     // appending batch2 only grows the index by batch2's rows
     DedupIndex.appendAndFindDups(spark, batch2, idx, "text", "doc_id")
+    assert(leaves("bands").length == 2 && leaves("sigs") == leaves("bands"))
     assert(spark.read.parquet(s"$idx/bands").count() == 6L * 16)
     assert(spark.read.parquet(s"$idx/sigs").count() == 6L)
   }
@@ -156,12 +161,12 @@ class DedupIndexSpec extends SparkSpec {
     // every append landed its own tag partition — the unbounded growth
     // foldBatches exists to stop
     assert(tagDirCount(s"$b/sigs") == 3)
-    assert(tagDirCount(s"$b/bands/band=0") == 3)
+    assert(tagDirCount(s"$b/bands") == 3)
     val folded = DedupIndex.foldBatches(spark, b)
-    assert(folded == 17, // sigs root + 16 band dirs
+    assert(folded == 2, // the sigs root and the bands root
       s"expected every outer dir folded, got $folded")
     assert(tagDirCount(s"$b/sigs") == 1)
-    assert(tagDirCount(s"$b/bands/band=0") == 1)
+    assert(tagDirCount(s"$b/bands") == 1)
     // folding moved rows under one tag, losing none
     assert(spark.read.parquet(s"$b/sigs").drop("batch_tag")
       .orderBy("doc_id").collect().toSeq ==
@@ -253,5 +258,59 @@ class DedupIndexSpec extends SparkSpec {
     val sigs = spark.read.parquet(s"$idx/sigs")
     assert(!sigs.columns.contains("batch_tag"), "the untagged layout was changed")
     assert(sigs.count() == 6L)
+  }
+
+  test("a tagged append opens the index without a listing or schema job " +
+      "and writes one file per table") {
+    val idx = tmpDir() + "/idx_jobs"
+    DedupIndex.appendAndFindDups(spark, batch1, idx, "text", "doc_id",
+      batchTag = Some("app-0"))
+    val sc = spark.sparkContext
+    val ((pairs, restored), jobs) = JobCounter.during(spark) {
+      sc.setJobDescription("caller")
+      try {
+        (DedupIndex.appendAndFindDups(spark, batch2, idx, "text", "doc_id",
+          batchTag = Some("app-1")), graft.meta.JobLabel.current(spark))
+      } finally sc.setJobDescription(null)
+    }
+    assert(restored.contains("caller"), "the caller's description was lost")
+    assert(collectPairs(pairs).exists { case (_, b, _) => b == 10L })
+    // listing and footer jobs run outside any SQL execution
+    assert(jobs.nonEmpty && jobs.forall(_.sqlExecution),
+      s"opening the index launched a Spark job: $jobs")
+    assert(jobs.forall(_.description == "graft:index.dedup"),
+      s"unlabelled jobs: ${jobs.filter(_.description != "graft:index.dedup")}")
+    for (t <- Seq("sigs", "bands")) {
+      val root = new java.io.File(s"$idx/$t")
+      assert(root.list().filter(_.contains("=")).toSet ==
+        Set("batch_tag=app-0", "batch_tag=app-1"))
+      assert(new java.io.File(root, "batch_tag=app-1").list()
+        .count(_.endsWith(".parquet")) == 1, s"$t wrote more than one file")
+    }
+  }
+
+  test("a bands/ in the bucketed band= layout fails the append until compact migrates it") {
+    val built = tmpDir() + "/idx_built"
+    val old = tmpDir() + "/idx_old"
+    DedupIndex.appendAndFindDups(spark, batch1, built, "text", "doc_id",
+      batchTag = Some("app-0"))
+    // the layout earlier builds wrote: a band directory, then the tag
+    spark.read.parquet(s"$built/bands")
+      .write.partitionBy("band", "batch_tag").parquet(s"$old/bands")
+    CrashingFs.copyOf(s"$built/sigs", s"$old/sigs")
+    val e = intercept[IllegalArgumentException] {
+      DedupIndex.appendAndFindDups(spark, batch2, old, "text", "doc_id",
+        batchTag = Some("app-1"))
+    }
+    assert(e.getMessage.contains("compact"), e.getMessage)
+    assert(DedupIndex.compact(spark, old) >= 1)
+    assert(new java.io.File(s"$old/bands").list()
+      .filter(_.contains("=")).toSeq == Seq("batch_tag=app-0"))
+    def pairs(idx: String) = collectPairs(DedupIndex.appendAndFindDups(spark,
+      batch2, idx, "text", "doc_id", batchTag = Some("app-1")))
+    val want = pairs(built)
+    assert(pairs(old) == want && want.nonEmpty)
+    assert(spark.read.parquet(s"$old/bands").count() ==
+      spark.read.parquet(s"$built/bands").count())
   }
 }

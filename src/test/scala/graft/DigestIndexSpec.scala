@@ -100,17 +100,81 @@ class DigestIndexSpec extends SparkSpec {
   }
 
   test("probe prunes the store by digest-bucket literals") {
+    // the store keeps one leaf per batch tag; a (replayed) append opens
+    // the other tags' leaves and never its own
     val idx = tmpDir() + "/didx"
-    DigestIndex.appendAndDedup(spark,
-      Seq((5L, a), (6L, b)).toDF("doc_id", "text"),
+    for ((t, rows) <- Seq("b1" -> Seq((5L, a)), "b2" -> Seq((6L, b)),
+        "b3" -> Seq((7L, c))))
+      DigestIndex.appendAndDedup(spark, rows.toDF("doc_id", "text"),
+        idx, "text", "doc_id", batchTag = Some(t))
+    val digests = new java.io.File(s"$idx/digests").getCanonicalPath
+    val (out, _) = CrashingFs.during(spark, digests) {
+      DigestIndex.appendAndDedup(spark, Seq((6L, b)).toDF("doc_id", "text"),
+        idx, "text", "doc_id", batchTag = Some("b2"))
+        .select("doc_id").as[Long].collect().toSeq
+    }
+    assert(out == Right(Seq(6L)), "the replay saw its own first attempt")
+    val leaves = CrashingFs.opened.map(new java.io.File(_))
+      .filter(f => f.getParentFile.getParent == digests)
+      .map(_.getParentFile.getName).toSet
+    assert(leaves == Set("batch_tag=b1", "batch_tag=b3"),
+      s"the probe read leaves $leaves")
+  }
+
+  test("a tagged append opens the store without a listing or schema job " +
+      "and writes one file") {
+    val idx = tmpDir() + "/didx"
+    DigestIndex.appendAndDedup(spark, Seq((5L, a), (6L, b)).toDF("doc_id", "text"),
       idx, "text", "doc_id", batchTag = Some("b1"))
-    // the pruning is inside appendAndDedup's eager probe; assert on the
-    // store's read path shape via a pruned scan of the same structure
-    val p = spark.read.parquet(s"$idx/digests").filter(col("db").isin(3, 4))
-      .queryExecution
-      .explainString(org.apache.spark.sql.execution.FormattedMode)
-    assert(p.contains("PartitionFilters") && p.contains("db#"),
-      s"db is not a partition column:\n$p")
+    val sc = spark.sparkContext
+    val (restored, jobs) = JobCounter.during(spark) {
+      sc.setJobDescription("caller")
+      try {
+        DigestIndex.appendAndDedup(spark,
+          Seq((1L, a), (9L, c), (10L, c), (11L, "delta")).toDF("doc_id", "text"),
+          idx, "text", "doc_id", batchTag = Some("b2"))
+        graft.meta.JobLabel.current(spark)
+      } finally sc.setJobDescription(null)
+    }
+    assert(restored.contains("caller"), "the caller's description was lost")
+    // listing and footer jobs run outside any SQL execution
+    assert(jobs.nonEmpty && jobs.forall(_.sqlExecution),
+      s"opening the store launched a Spark job: $jobs")
+    assert(jobs.forall(_.description == "graft:index.digest"),
+      s"unlabelled jobs: ${jobs.filter(_.description != "graft:index.digest")}")
+    val store = new java.io.File(s"$idx/digests")
+    assert(store.list().filter(_.contains("=")).toSet ==
+      Set("batch_tag=b1", "batch_tag=b2"))
+    assert(new java.io.File(store, "batch_tag=b2").list()
+      .count(_.endsWith(".parquet")) == 1)
+  }
+
+  test("a store in the bucketed db= layout fails the append until compact migrates it") {
+    val built = tmpDir() + "/didx"
+    val old = tmpDir() + "/didx_old"
+    val b1 = Seq((5L, a), (6L, b)).toDF("doc_id", "text")
+    val b2 = Seq((1L, a), (9L, c)).toDF("doc_id", "text")
+    DigestIndex.appendAndDedup(spark, b1, built, "text", "doc_id",
+      batchTag = Some("b1"))
+    // the layout earlier builds wrote: 64 hash buckets, then the tag
+    spark.read.parquet(s"$built/digests")
+      .withColumn("db", pmod(xxhash64(col("digest")), lit(64L)).cast("int"))
+      .write.partitionBy("db", "batch_tag").parquet(s"$old/digests")
+    val e = intercept[IllegalArgumentException] {
+      DigestIndex.appendAndDedup(spark, b2, old, "text", "doc_id",
+        batchTag = Some("b2"))
+    }
+    assert(e.getMessage.contains("compact"), e.getMessage)
+    intercept[IllegalArgumentException](DigestIndex.currentGroups(spark, old))
+    DigestIndex.compact(spark, old)
+    assert(new java.io.File(s"$old/digests").list()
+      .filter(_.contains("=")).toSeq == Seq("batch_tag=folded"))
+    def firsts(idx: String) = DigestIndex.appendAndDedup(spark, b2, idx,
+      "text", "doc_id", batchTag = Some("b2")).select("doc_id").as[Long]
+      .collect().toSet
+    assert(firsts(old) == firsts(built))
+    assert(groupsOf(DigestIndex.currentGroups(spark, old)) ==
+      groupsOf(DigestIndex.currentGroups(spark, built)))
   }
 
   test("empty batch returns empty and creates nothing") {
